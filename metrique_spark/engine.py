@@ -29,7 +29,8 @@ from metrique_spark.mql import (compile_mql, date_end_lower_bound,
                                 date_range_predicate,
                                 date_start_upper_bound, oid_literal_set,
                                 parse_fields, to_timestamp_lit)
-from metrique_spark.objects import stamp, validate
+from metrique_spark.objects import (check_invariants, invariant_counts,
+                                    stamp, validate)
 
 import logging
 
@@ -444,30 +445,26 @@ class Engine:
                                F.col("_current").cast("boolean"))
         return df
 
-    def _migration_hit_dirs(self, incoming: DataFrame, meta: dict,
+    def _migration_hit_dirs(self, hit: dict[int, set[int]], meta: dict,
                             buckets: int, dirs,
                             current_only: bool) -> set[str]:
         """The manifest directories a merge/import must read-and-drop
-        for ``incoming``'s oids during in-flight doubling migration(s):
-        an oid's rows live in a directory at modulus ``m`` only where
+        for a batch's oids during in-flight doubling migration(s): an
+        oid's rows live in a directory at modulus ``m`` only where
         ``__obucket = hash % m`` — resolved per DIRECTORY vintage from
         the per-dir modulus blocks (a value-level predicate cannot tell
-        vintages apart). One tiny Spark job computes the hit bucket
-        values under EVERY live modulus at once — chained doublings
-        (3+ moduli) cost the same single job. Caller must have
-        checkpointed ``incoming`` first."""
+        vintages apart). ``hit`` maps every live modulus (chained
+        doublings included) to the batch's bucket values under it —
+        the commit profile computes them all in its one aggregate (see
+        ``_profile_batch``)."""
         blocks = meta.get("migration") or []
-        mods = [buckets] + [b["from"] for b in blocks]
-        sel = [self._obucket(m).alias(f"__b{i}")
-               for i, m in enumerate(mods)]
-        hitrows = incoming.select(*sel).distinct().collect()
-        hit = {m: {f"__obucket={r[f'__b{i}']}" for r in hitrows}
-               for i, m in enumerate(mods)}
+        names = {m: {f"__obucket={v}" for v in vals}
+                 for m, vals in hit.items()}
         dmod = {d: b["from"] for b in blocks for d in b["old_dirs"]}
         return {d for d in dirs
                 if (not current_only or d.startswith("_current=true"))
                 and "/__obucket=" in d
-                and d.split("/")[1] in hit[dmod.get(d, buckets)]}
+                and d.split("/")[1] in names[dmod.get(d, buckets)]}
 
     @staticmethod
     def _prune_dirs_by_bucket(dirs: list, values: Sequence[int]) -> list:
@@ -2025,23 +2022,16 @@ class Engine:
                 "__batch",
                 F.when(F.col("_current"), F.lit(f"open-g{gen}"))
                 .otherwise(F.lit(f"rb-g{gen}")))
-            out = out.withColumn("__obucket", self._obucket(oid_buckets))
-            if timepart:
-                out = out.withColumn("__stime", self._stime_col(timepart))
+            out = self._with_part_cols(out, oid_buckets, timepart)
             # localCheckpoint: the write lands under the same root the
             # plan reads from (fresh relpaths, but Spark's self-
             # overwrite check is path-based), and a retry must not
             # recompute from directories the write is mutating
             out = out.select(*cols, *part_cols).localCheckpoint(
                 eager=True)
-            (
-                self._cube_writer(out).mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*part_cols)
-                .parquet(path)
-            )
+            self._write_dirs(out, path, oid_buckets, timepart)
             new_rels = self._record_sizes(
-                path, self._written_dir_stats(out, oid_buckets, timepart))
+                path, self._written_dir_stats(out, oid_buckets, timepart)[1])
             dirs = set(new_rels)
             hist = self._push_history(meta, keep)
             self._backfill_history_buckets(hist, meta, layout)
@@ -2251,23 +2241,16 @@ class Engine:
                 "__batch",
                 F.when(F.col("_current"), F.lit(f"open-g{gen}"))
                 .otherwise(F.lit(f"mig-g{gen}")))
-            out = out.withColumn("__obucket", self._obucket(buckets))
-            if timepart:
-                out = out.withColumn("__stime", self._stime_col(timepart))
+            out = self._with_part_cols(out, buckets, timepart)
             part_cols = self._partition_keys(buckets, timepart)
             # localCheckpoint: the write lands under the same root the
             # plan reads from, and a retry must not recompute from
             # directories the write is mutating
             out = out.select(*cols, *part_cols).localCheckpoint(
                 eager=True)
-            (
-                self._cube_writer(out).mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*part_cols)
-                .parquet(path)
-            )
+            self._write_dirs(out, path, buckets, timepart)
             new_rels = self._record_sizes(
-                path, self._written_dir_stats(out, buckets, timepart))
+                path, self._written_dir_stats(out, buckets, timepart)[1])
             dirs = (live - set(chunk)) | set(new_rels)
             hist = self._push_history(meta, keep)
             self._manifest_flip(path, raw, gen, dirs, hist,
@@ -2961,24 +2944,48 @@ class Engine:
 
     def _written_dir_stats(
         self, out: DataFrame, buckets: int | None,
-        timepart: str | None = None,
-    ) -> dict[str, dict[str, str | None]]:
+        timepart: str | None = None, open_batch: str | None = None,
+    ) -> tuple[str | None, dict[str, dict[str, str | None]]]:
         """Manifest-relative directory paths a partitioned write of
         ``out`` produces, each with its ``max(_end)`` (None for open
-        directories) — computed from the DATA (one small aggregate over
-        the partition columns, the same shuffle the old relpath distinct
-        cost), not from a listing. The stats land in the manifest and
-        let as-of reads skip closed directories whose whole content
-        ended before the probe date (the lakehouse data-skipping
-        pattern, at directory granularity)."""
+        directories), ``min(_start)`` and row count — computed from the
+        DATA in one small aggregate over the partition columns, not
+        from a listing. The stats land in the manifest and let as-of
+        reads skip closed directories whose whole content ended before
+        the probe date (the lakehouse data-skipping pattern, at
+        directory granularity).
+
+        A frame that carries its ``__batch`` column is keyed by it. A
+        frame without one leaves the batch names to this aggregate:
+        open rows go to ``open_batch`` and closed rows to their content
+        token ``n{rows}x{sum}``, the sum being ``xxhash64(_id, _end)``
+        per row — an order-insensitive checksum that aggregates
+        map-side with constant memory per task (a collect_list token
+        would hold every closed _id in ONE aggregation buffer,
+        gigabytes at a 100 TB-scale batch). The per-directory partial
+        sums are decimal(38,0), which cannot overflow under ANSI until
+        ~1e19 rows; they add up in Python ``int``. The token is what
+        makes a retried closed-row write idempotent: the same content
+        overwrites the same directory. Returns ``(token, stats)``; the
+        token is None when the batch names came with the frame or no
+        row is closed."""
         cols = self._partition_keys(buckets, timepart)
-        agg = (out.groupBy(*cols)
-               .agg(F.date_format(F.max("_end"), _END_STAT_FMT)
-                    .alias("__max_end"),
-                    F.date_format(F.min("_start"), _END_STAT_FMT)
-                    .alias("__min_start"),
-                    F.count(F.lit(1)).alias("__rows"))
-               .collect())
+        tokened = "__batch" not in out.columns
+        aggs = [F.date_format(F.max("_end"), _END_STAT_FMT).alias("__max_end"),
+                F.date_format(F.min("_start"), _END_STAT_FMT)
+                .alias("__min_start"),
+                F.count(F.lit(1)).alias("__rows")]
+        if tokened:
+            cols.remove("__batch")
+            aggs.append(F.sum(F.xxhash64("_id", F.col("_end").cast("string"))
+                              .cast("decimal(38,0)")).alias("__hsum"))
+        agg = out.groupBy(*cols).agg(*aggs).collect()
+        token = None
+        if tokened:
+            closed = [r for r in agg if not r["_current"]]
+            n = sum(r["__rows"] for r in closed)
+            if n:
+                token = f"n{n}x{sum(int(r['__hsum']) for r in closed)}"
         stats: dict[str, dict] = {}
         for r in agg:
             parts = []
@@ -2995,10 +3002,13 @@ class Engine:
                         f"null {c} partition value (null _start?) — "
                         "time-partitioned cubes require non-null _start")
                 parts.append(f"{c}={v}")
+            if tokened:
+                parts.append(
+                    f"__batch={open_batch if r['_current'] else token}")
             stats["/".join(parts)] = {"max_end": r["__max_end"],
                                       "min_start": r["__min_start"],
                                       "rows": r["__rows"]}
-        return stats
+        return token, stats
 
     def _record_sizes(
         self, path: str, stats: dict[str, dict[str, str | int | None]],
@@ -3201,6 +3211,28 @@ class Engine:
                          str(ndv)))
         return w
 
+    def _with_part_cols(self, out: DataFrame, buckets: int | None,
+                        timepart: str | None) -> DataFrame:
+        """``out`` plus the scan-stage ``__obucket``/``__stime``
+        partition columns the layout asks for."""
+        if buckets:
+            out = out.withColumn("__obucket", self._obucket(buckets))
+        if timepart:
+            out = out.withColumn("__stime", self._stime_col(timepart))
+        return out
+
+    def _write_dirs(self, out: DataFrame, path: str, buckets: int | None,
+                    timepart: str | None, mode: str = "overwrite",
+                    dynamic: bool = True) -> None:
+        """The partitioned parquet write every data commit ends with."""
+        (
+            self._cube_writer(out).mode(mode)
+            .partitionBy(*self._partition_keys(buckets, timepart))
+            .option("partitionOverwriteMode",
+                    "dynamic" if dynamic else "static")
+            .parquet(path)
+        )
+
     def _write_partitioned(
         self, df: DataFrame, path: str, mode: str, dynamic: bool = True,
         buckets: int | None = None, open_batch: str = "open",
@@ -3220,103 +3252,55 @@ class Engine:
             F.when(F.col("_current"), F.lit(open_batch))
             .otherwise(F.lit(hist_batch)),
         )
-        if buckets:
-            out = out.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            out = out.withColumn("__stime", self._stime_col(timepart))
-        (
-            self._cube_writer(out).mode(mode)
-            .partitionBy(*self._partition_keys(buckets, timepart))
-            .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
-            .parquet(path)
-        )
-        return (self._written_dir_stats(out, buckets, timepart)
+        out = self._with_part_cols(out, buckets, timepart)
+        self._write_dirs(out, path, buckets, timepart, mode, dynamic)
+        return (self._written_dir_stats(out, buckets, timepart)[1]
                 if collect_dirs else None)
 
-    def _batch_token(self, closed: DataFrame) -> str | None:
-        """Deterministic content token for a closed-row batch, or None
-        when the batch is empty. Order-insensitive distributed checksum:
-        sum of per-row xxhash64 aggregates map-side with constant memory
-        per task (a collect_list token would hold every closed _id in ONE
-        aggregation buffer — gigabytes at a 100 TB-scale batch).
-        decimal(38,0) sum can't overflow under ANSI until ~1e19 rows."""
-        tok = closed.agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.xxhash64("_id", F.col("_end").cast("string"))
-                .cast("decimal(38,0)")
-            ).alias("s"),
-        ).first()
-        if not tok["n"]:
-            return None
-        return f"n{tok['n']}x{tok['s']}"
-
-    def _write_closed_batch(
-        self, closed: DataFrame, path: str, buckets: int | None = None,
-        live: set[str] | None = None, timepart: str | None = None,
+    def _write_tagged(
+        self, tagged: DataFrame, path: str, buckets: int | None,
+        timepart: str | None = None, open_batch: str | None = None,
+        live: set[str] | None = None,
     ) -> tuple[str | None, dict[str, dict[str, str | None]]]:
-        """Write newly-closed rows into a history partition keyed by a
-        deterministic content token: retrying the same merge overwrites the
-        SAME directory instead of appending duplicates. Returns the token
-        and the per-directory stats (relpath -> max(_end)) of the
-        directories holding it. When ``live`` manifest dirs are given and
-        the token's directories are ALREADY referenced (re-upserting
-        byte-identical content), the write is skipped — overwriting a
-        live directory would tear a concurrent reader."""
-        token = self._batch_token(closed)
-        if token is None:
-            return None, {}
-        out = (closed.withColumn("_current", F.lit(False))
-               .withColumn("__batch", F.lit(token)))
-        if buckets:
-            out = out.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            out = out.withColumn("__stime", self._stime_col(timepart))
-        rels = self._written_dir_stats(out, buckets, timepart)
-        if live is not None and rels:
-            if set(rels) <= live:
-                return token, rels
-            if any(self._batch_dir_token(d) == token for d in live):
+        """ONE stats aggregate and ONE partitioned write of a frame whose
+        ``__closed`` flag picks each row's side. Closed rows land under
+        their content token (``_written_dir_stats``), so retrying the
+        same content overwrites the SAME directory instead of appending
+        duplicates; open rows land under ``open_batch``. Given the
+        ``live`` manifest dirs, closed rows whose token is already
+        committed drop out of the write. Returns the token and the stats
+        of every directory the caller references."""
+        cols = [c for c in tagged.columns if c != "__closed"]
+        out = self._with_part_cols(
+            tagged.withColumn("_current", ~F.col("__closed")),
+            buckets, timepart)
+        token, stats = self._written_dir_stats(out, buckets, timepart,
+                                               open_batch=open_batch)
+        closed = {d: v for d, v in stats.items()
+                  if d.startswith("_current=false")}
+        opened = {d: v for d, v in stats.items() if d not in closed}
+        write_closed = True
+        if live is not None and closed:
+            if set(closed) <= live:
+                # re-upserted byte-identical content: overwriting a live
+                # directory would tear a concurrent reader
+                write_closed = False
+            elif any(self._batch_dir_token(d) == token for d in live):
                 # identical content already committed under ANOTHER
-                # modulus's directories (re-upsert of a byte-identical
-                # batch during a doubling migration): keep the existing
-                # copy referenced instead of writing a second one the
-                # reads would double-count
-                return token, {}
-        (
-            self._cube_writer(out).mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._partition_keys(buckets, timepart))
-            .parquet(path)
-        )
-        return token, rels
-
-    def _write_open(self, new_open: DataFrame, path: str,
-                    buckets: int | None = None,
-                    open_batch: str = "open",
-                    timepart: str | None = None
-                    ) -> dict[str, dict[str, str | None]]:
-        """Dynamically overwrite the open partition(s). Manifested cubes
-        pass a generation-scoped batch name so the write lands in fresh
-        directories instead of mutating the live open partition. Returns
-        the written directories' stats (min_start matters: open
-        directories carry forward across bucket-granular commits, and
-        the recorded min(_start) lets an as-of read skip open buckets
-        whose rows all started after the probe; max_end is NULL for an
-        open dir and _merged_stats drops it)."""
-        out = (new_open.withColumn("_current", F.lit(True))
-               .withColumn("__batch", F.lit(open_batch)))
-        if buckets:
-            out = out.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            out = out.withColumn("__stime", self._stime_col(timepart))
-        (
-            self._cube_writer(out).mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._partition_keys(buckets, timepart))
-            .parquet(path)
-        )
-        return self._written_dir_stats(out, buckets, timepart)
+                # modulus's directories (re-upsert during a doubling
+                # migration): keep that copy referenced instead of
+                # writing a second one the reads would double-count
+                closed, write_closed = {}, False
+        if not write_closed:
+            out = out.where(F.col("_current"))
+        if opened or (write_closed and closed):
+            out = out.withColumn(
+                "__batch", F.when(F.col("_current"), F.lit(open_batch))
+                .otherwise(F.lit(token)))
+            self._write_dirs(
+                out.select(*cols, *self._partition_keys(buckets, timepart)),
+                path, buckets, timepart)
+        return token, {**closed, **opened}
 
     def compact(self, cube: str, target_partitions: int | None = None,
                 sort_by: Sequence[str] | None = None,
@@ -3533,8 +3517,8 @@ class Engine:
             # localCheckpoint: the write below rewrites the directories
             # this plan reads from
             closed = closed.localCheckpoint(eager=True)
-            token, _ = self._write_closed_batch(closed, path,
-                                                buckets=buckets)
+            token, _ = self._write_tagged(
+                closed.withColumn("__closed", F.lit(True)), path, buckets)
             removed = 0
             for full in batches:
                 # the consolidated dir may reuse one of the existing
@@ -3579,9 +3563,9 @@ class Engine:
             # localCheckpoint: the write below rewrites the directories
             # this plan reads from
             closed = closed.localCheckpoint(eager=True)
-            _, grels = self._write_closed_batch(
-                closed, path, buckets=buckets,
-                live=self._retained_dirs(meta), timepart=timepart)
+            _, grels = self._write_tagged(
+                closed.withColumn("__closed", F.lit(True)), path, buckets,
+                timepart, live=self._retained_dirs(meta))
             rels.update(grels)
             merged_all |= merge
         drop = {d for d in live
@@ -3671,17 +3655,17 @@ class Engine:
         between data and sidecar would otherwise let the next writer
         extend a bucketed cube with the legacy layout); the manifest PUT
         is the commit point — until it lands, readers see nothing and a
-        retry rewrites the same gen-1 directories."""
+        retry rewrites the same gen-1 directories.
+
+        ``obj`` must be checkpointed by the caller: the data write and
+        the stats aggregate below must see the SAME rows — stamp()'s
+        default _start is current_timestamp() (fixed per QUERY,
+        different across the two jobs), so an unpinned plan straddling
+        a period boundary would record manifest dirs the data never
+        landed in, and the sweep would then delete the real ones."""
         buckets = self.oid_buckets
         self._write_layout(path, buckets, self.time_partition,
                            self.keep_generations)
-        # checkpoint: the data write and the relpath distinct below must
-        # see the SAME rows — stamp()'s default _start is
-        # current_timestamp() (fixed per QUERY, different across the two
-        # jobs), so an unpinned plan straddling a period boundary would
-        # record manifest dirs the data never landed in, and the sweep
-        # would then delete the real ones
-        obj = obj.localCheckpoint(eager=True)
         dirs = self._write_partitioned(
             obj, path, "overwrite", buckets=buckets,
             open_batch="open-g1", hist_batch="hist-g1", collect_dirs=True,
@@ -3713,7 +3697,7 @@ class Engine:
         with self._write_lock(cube):
             state, meta, raw = self._cube_state(path)
             if state == "new":
-                self._first_write(path, obj)
+                self._first_write(path, obj.localCheckpoint(eager=True))
                 return
             if state == "premanifest":
                 meta, raw = self._adopt_premanifest(path)
@@ -3763,9 +3747,11 @@ class Engine:
         NEW columns widen the cube schema when ``evolve`` — on-disk
         files never rewrite; the manifest's authoritative schema makes
         pre-evolution files read back as typed nulls. ``evolve=False``
-        fails loud on new columns instead."""
+        fails loud on new columns instead. The batch invariants
+        (``objects.validate``) are checked inside the commit's first
+        aggregate, under the writer lease and before any write: a bad
+        batch raises and leaves the cube's generation unchanged."""
         incoming = df if stamped else stamp(df, **stamp_kw)
-        validate(incoming)
         path = self._path(cube)
         with self._write_lock(cube):
             self._upsert_locked(cube, path, incoming, autosnap, evolve)
@@ -3781,21 +3767,63 @@ class Engine:
             if m.get("auto") and m.get("stale"):
                 self.refresh_vector_index(cube, name)
 
+    def _profile_batch(self, incoming: DataFrame, moduli: Sequence[int]
+                       ) -> tuple[int, dict[int, set[int]]]:
+        """ONE aggregate over the checkpointed batch, grouped by its oid
+        bucket under every live modulus (chained doublings included;
+        none on an unbucketed or new cube). It checks the batch
+        invariants (``objects.invariant_counts`` — the definition
+        ``validate`` uses) and raises before any write; it counts the
+        closed rows (autosnap detection, reference
+        ``sqlalchemy.py:910-915``); and its group keys are the hit
+        bucket values per modulus. Returns ``(closed rows, hit)``."""
+        keys = [self._obucket(m).alias(f"__b{i}")
+                for i, m in enumerate(moduli)]
+        rows = (incoming.groupBy(*keys)
+                .agg(*invariant_counts(), F.count("_end").alias("closed"))
+                .collect())
+
+        def total(k: str) -> int:
+            return sum(r[k] or 0 for r in rows)
+
+        check_invariants(total("null_oid"), total("bad_interval"))
+        hit = {m: {r[f"__b{i}"] for r in rows}
+               for i, m in enumerate(moduli)}
+        return total("closed"), hit
+
     def _upsert_locked(self, cube, path, incoming, autosnap, evolve=True):
-        if autosnap is None:
-            autosnap = _upsert.detect_autosnap(incoming)
-        if autosnap:
-            # last write wins within a snapshot batch (the reference's
-            # container buffer is keyed by _id, core_api.py:537-540)
-            incoming = _upsert.latest_per_oid(incoming)
+        # A manifested snapshot commit runs five actions (upsert.py,
+        # "Scale design"): checkpoint → profile → merge → stats → one
+        # write. 1. Checkpoint the batch ONCE: the profile, the merge,
+        # the stats and the write must all see the same rows — a
+        # nondeterministic source recomputed between the hit-bucket
+        # profile and the merge could land rows in an unmerged bucket,
+        # whose open rows the merge never saw. The first write and the
+        # history import reuse it too.
+        incoming = incoming.localCheckpoint(eager=True)
         state, meta, raw = self._cube_state(path)
+        layout = self._cube_layout(path) if state != "new" else None
+        buckets = self._live_buckets(meta, layout)
+        mig = meta.get("migration") if meta is not None else None
+        moduli = ([buckets] + [b["from"] for b in mig or []]
+                  if buckets else [])
+        # 2. profile: invariants, autosnap, hit buckets — one aggregate
+        n_closed, hit = self._profile_batch(incoming, moduli)
+        if autosnap is None:
+            autosnap = not n_closed
         if state == "new":
+            if autosnap:
+                # last write wins within a snapshot batch (the
+                # reference's container buffer is keyed by _id,
+                # core_api.py:537-540); the merge paths below dedup
+                # inside snapshot_merge_tagged
+                incoming = _upsert.latest_per_oid(incoming).localCheckpoint(
+                    eager=True)
             self._first_write(path, incoming)
             return
         if state == "premanifest":
             meta, raw = self._adopt_premanifest(path)
-        layout = self._cube_layout(path)
-        buckets = self._live_buckets(meta, layout)
+            layout = self._cube_layout(path)
         timepart = self._cube_timepart(path, for_write=True, layout=layout)
         if meta is not None and meta.get("schema") is not None and buckets:
             # every consumer of ``table`` on the bucketed manifested
@@ -3816,190 +3844,13 @@ class Engine:
         self._check_redrop(path, incoming, set(table.columns))
         table, incoming, cols = self._align_incoming(table, incoming, evolve)
         msch = self._manifest_schema(incoming.schema, buckets, timepart)
-        mig = meta.get("migration") if meta is not None else None
-        if autosnap:
-            hit_open: set[str] | None = None
-            drop_open: set[str] | None = None
-            if meta is not None and buckets and mig:
-                # MIGRATION-AWARE bucket-granular merge: the open rows
-                # an incoming oid can touch live in an open dir at ANY
-                # modulus still present (live count, plus each chained
-                # doubling's from-modulus) — resolve the hit
-                # DIRECTORIES per vintage from the manifest blocks and
-                # read exactly the set being dropped. Rewriting under
-                # the live modulus migrates the hit old dirs' open rows
-                # as a side effect — the opportunistic half of the
-                # doubling migration; _manifest_flip's carry rule
-                # retires their stamps automatically.
-                incoming = incoming.localCheckpoint(eager=True)
-                drop_open = self._migration_hit_dirs(
-                    incoming, meta, buckets, meta["dirs"],
-                    current_only=True)
-                if drop_open:
-                    pruned = self._read_dirs(path, meta,
-                                             sorted(drop_open))
-                elif meta.get("schema") is not None:
-                    # no existing open dir can hold these oids: merge
-                    # against an empty open side (schema from the
-                    # manifest — no O(cube) listing for a no-op read)
-                    pruned = self._empty_schema_frame(meta["schema"])
-                else:
-                    # pre-schema manifest: the listing read's schema
-                    pruned = self._read_raw(path).where(F.lit(False))
-                pruned = pruned.drop(*[c for c in
-                                       ("__batch", "__obucket", "__stime",
-                                        "_current")
-                                       if c in pruned.columns])
-                inc_types = {f.name: f.dataType
-                             for f in incoming.schema.fields}
-                for c in cols:
-                    if c not in pruned.columns:
-                        pruned = pruned.withColumn(
-                            c, F.lit(None).cast(inc_types[c]))
-                open_rows = pruned.select(*cols)
-            elif meta is not None and buckets:
-                # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
-                # partitioned, and a snapshot batch can only touch open
-                # rows whose _oid it carries — so read, merge and rewrite
-                # ONLY the bucket directories the incoming oids hash
-                # into; every other open-bucket directory carries
-                # forward by manifest reference, untouched on disk (the
-                # same trick the bounded history import and the ANN
-                # gbucket removal use). At 100 TB this turns the
-                # per-commit write cost from O(|current snapshot|) into
-                # O(open rows of hit buckets + closed delta).
-                # Checkpoint incoming FIRST: the hit-bucket collect and
-                # the merge below must see the same rows — a
-                # nondeterministic source recomputed between them could
-                # land rows in an unmerged bucket, whose open rows the
-                # merge never saw (silently dropping them from the new
-                # open set for that bucket).
-                incoming = incoming.localCheckpoint(eager=True)
-                ob = self._obucket(buckets)
-                hit = sorted(
-                    r["b"] for r in
-                    incoming.select(ob.alias("b")).distinct().collect())
-                hit_open = {f"__obucket={b}" for b in hit}
-                # read exactly the open dirs of hit buckets by RELPATH
-                # (the same selector the post-write carry-forward drops
-                # by, so read-set == drop-set by construction) — the
-                # full-cube _read_raw here listed O(cube) directories
-                # per trickle commit just to partition-filter them
-                # away; at 100 TB that listing was the commit's
-                # dominant metadata cost
-                hit_rels = sorted(
-                    d for d in meta["dirs"]
-                    if d.startswith("_current=true")
-                    and d.split("/")[1] in hit_open)
-                if hit_rels:
-                    pruned = self._read_dirs(path, meta, hit_rels)
-                    pruned = pruned.where(
-                        F.col("_current")
-                        & F.col("__obucket").isin(hit))
-                elif meta.get("schema") is not None:
-                    pruned = self._empty_schema_frame(meta["schema"])
-                else:
-                    pruned = self._read_raw(path).where(F.lit(False))
-                pruned = pruned.drop(*[c for c in
-                                       ("__batch", "__obucket", "__stime",
-                                        "_current")
-                                       if c in pruned.columns])
-                # the pruned rows were read under the PRE-commit schema;
-                # null-fill any columns this batch evolves in, like the
-                # history import does for its kept rows
-                inc_types = {f.name: f.dataType
-                             for f in incoming.schema.fields}
-                for c in cols:
-                    if c not in pruned.columns:
-                        pruned = pruned.withColumn(
-                            c, F.lit(None).cast(inc_types[c]))
-                open_rows = pruned.select(*cols)
-            else:
-                open_rows = table.where(F.col("_current")).select(*cols)
-            # one join, one materialization (must happen before rewriting
-            # the partition we read from), then two cheap filters
-            tagged = _upsert.snapshot_merge_tagged(
-                open_rows, incoming.select(*cols)
-            ).localCheckpoint(eager=True)
-            closed = tagged.where(F.col("__closed")).drop("__closed")
-            new_open = tagged.where(~F.col("__closed")).drop("__closed")
+        keep = layout.get("keep_generations", 0) if layout else 0
+        if not autosnap:
             if meta is not None:
-                # snapshot-isolated commit: both writes land in
-                # directories no live manifest references; the pointer
-                # flip publishes them atomically. A crash anywhere before
-                # the flip leaves readers on the old generation and the
-                # retried batch rewrites the same directories (the token
-                # is content-keyed, the open dir is gen-keyed and the gen
-                # didn't advance).
-                gen = meta["gen"] + 1
-                live = set(meta["dirs"])
-                _, closed_rels = self._write_closed_batch(
-                    closed, path, buckets=buckets,
-                    live=self._retained_dirs(meta),  # history dirs too:
-                    # overwriting one would corrupt a retained snapshot
-                    timepart=timepart)
-                open_stats = self._write_open(
-                    new_open, path, buckets=buckets,
-                    open_batch=f"open-g{gen}", timepart=timepart)
-                open_rels = set(open_stats)
-                if drop_open is not None:
-                    # migration-aware merge: exactly the dirs read above
-                    dirs = (live - drop_open) | set(closed_rels) | open_rels
-                elif hit_open is not None:
-                    # drop only the open dirs of MERGED (hit) buckets;
-                    # untouched open-bucket dirs stay referenced
-                    drop = {d for d in live
-                            if d.startswith("_current=true")
-                            and d.split("/")[1] in hit_open}
-                    dirs = (live - drop) | set(closed_rels) | open_rels
-                else:
-                    dirs = ({d for d in live
-                             if not d.startswith("_current=true")}
-                            | set(closed_rels) | open_rels)
-                hist = self._push_history(
-                    meta,
-                    layout.get("keep_generations", 0) if layout else 0)
-                self._manifest_flip(path, raw, gen, dirs, hist,
-                                    stats=self._merged_stats(
-                                        meta,
-                                        self._record_sizes(
-                                            path,
-                                            {**closed_rels, **open_stats}),
-                                        dirs, hist, path=path),
-                                    schema=msch)
-                self._sweep_dropped(
-                    path, meta,
-                    dirs | {d for h in hist for d in h["dirs"]})
-            else:
-                # legacy in-place commit (no isolation): closed rows
-                # FIRST (idempotent token-keyed partition), open
-                # overwrite second — a crash between the two leaves old
-                # rows open alongside their closed copies; retrying the
-                # same batch converges.
-                self._write_closed_batch(closed, path, buckets=buckets)
-                self._write_open(new_open, path, buckets=buckets)
-            if self.auto_compact_batches:
-                if meta is not None:
-                    # count only SMALL tokens (manifest-recorded sizes,
-                    # no listing): consolidated levels above the tier
-                    # threshold are already compacted and must not
-                    # re-trigger an O(|history|) rewrite every commit
-                    fresh = self._manifest(path)
-                    n = sum(s <= self.compact_small_bytes for s in
-                            self._history_token_sizes(path, fresh)
-                            .values())
-                else:
-                    n = len({d.rsplit("/", 1)[-1]
-                             for d in self._closed_batch_dirs(path)})
-                if n > self.auto_compact_batches:
-                    self.compact(cube)
-        elif meta is not None:
-            self._history_replace_manifested(
-                path, incoming.select(*cols), cols, buckets, meta, raw,
-                timepart=timepart,
-                keep=layout.get("keep_generations", 0) if layout else 0,
-                schema=msch)
-        else:
+                self._history_replace_manifested(
+                    path, incoming.select(*cols), cols, buckets, meta, raw,
+                    hit, timepart=timepart, keep=keep, schema=msch)
+                return
             replaced = _upsert.history_replace(
                 table.select(*cols), incoming.select(*cols)
             ).localCheckpoint(eager=True)
@@ -4016,12 +3867,131 @@ class Engine:
             self._write_partitioned(replaced, path, "overwrite", dynamic=False)
             if ix is not None:
                 self.fs.write_text(ixp, ix)
+            return
+        drop: set[str] | None = None  # the open dirs this commit replaces
+        if meta is not None and buckets:
+            if mig:
+                # MIGRATION-AWARE bucket-granular merge: the open rows
+                # an incoming oid can touch live in an open dir at ANY
+                # modulus still present (live count, plus each chained
+                # doubling's from-modulus) — resolve the hit
+                # DIRECTORIES per vintage from the manifest blocks and
+                # read exactly the set being dropped. Rewriting under
+                # the live modulus migrates the hit old dirs' open rows
+                # as a side effect — the opportunistic half of the
+                # doubling migration; _manifest_flip's carry rule
+                # retires their stamps automatically.
+                drop = self._migration_hit_dirs(
+                    hit, meta, buckets, meta["dirs"], current_only=True)
+            else:
+                # BUCKET-GRANULAR merge: the open snapshot is oid-bucket
+                # partitioned, and a snapshot batch can only touch open
+                # rows whose _oid it carries — so read, merge and
+                # rewrite ONLY the open dirs of the buckets the incoming
+                # oids hash into (by RELPATH, so read-set == drop-set by
+                # construction, with no O(cube) listing); every other
+                # open-bucket directory carries forward by manifest
+                # reference, untouched on disk (the same trick the
+                # bounded history import and the ANN gbucket removal
+                # use). At 100 TB this turns the per-commit write cost
+                # from O(|current snapshot|) into O(open rows of hit
+                # buckets + closed delta).
+                hit_open = {f"__obucket={b}" for b in hit[buckets]}
+                drop = {d for d in meta["dirs"]
+                        if d.startswith("_current=true")
+                        and d.split("/")[1] in hit_open}
+            if drop:
+                pruned = self._read_dirs(path, meta, sorted(drop))
+                if not mig:
+                    # value-level twin of the relpath selection: the
+                    # scan carries PartitionFilters on both keys
+                    pruned = pruned.where(
+                        F.col("_current")
+                        & F.col("__obucket").isin(sorted(hit[buckets])))
+            elif meta.get("schema") is not None:
+                # no existing open dir can hold these oids: merge
+                # against an empty open side (schema from the manifest
+                # — no O(cube) listing for a no-op read)
+                pruned = self._empty_schema_frame(meta["schema"])
+            else:
+                # pre-schema manifest: the listing read's schema
+                pruned = self._read_raw(path).where(F.lit(False))
+            pruned = pruned.drop(*[c for c in
+                                   ("__batch", "__obucket", "__stime",
+                                    "_current")
+                                   if c in pruned.columns])
+            # the pruned rows were read under the PRE-commit schema;
+            # null-fill any columns this batch evolves in, like the
+            # history import does for its kept rows
+            inc_types = {f.name: f.dataType for f in incoming.schema.fields}
+            for c in cols:
+                if c not in pruned.columns:
+                    pruned = pruned.withColumn(
+                        c, F.lit(None).cast(inc_types[c]))
+            open_rows = pruned.select(*cols)
+        else:
+            open_rows = table.where(F.col("_current")).select(*cols)
+        # 3. one join, one materialization (must happen before rewriting
+        # the partition we read from)
+        tagged = _upsert.snapshot_merge_tagged(
+            open_rows, incoming.select(*cols)
+        ).localCheckpoint(eager=True)
+        if meta is not None:
+            # 4-5. snapshot-isolated commit: one stats aggregate, then
+            # one write of closed and open rows into directories no
+            # live manifest references; the pointer flip publishes them
+            # atomically. A crash anywhere before the flip leaves
+            # readers on the old generation and the retried batch
+            # rewrites the same directories (the closed dirs are
+            # content-keyed, the open dirs gen-keyed, and the gen
+            # didn't advance).
+            gen = meta["gen"] + 1
+            live = set(meta["dirs"])
+            if drop is None:
+                drop = {d for d in live if d.startswith("_current=true")}
+            _, rels = self._write_tagged(
+                tagged, path, buckets, timepart, f"open-g{gen}",
+                # history dirs too: overwriting one would corrupt a
+                # retained snapshot
+                live=self._retained_dirs(meta))
+            dirs = (live - drop) | set(rels)
+            hist = self._push_history(meta, keep)
+            self._manifest_flip(path, raw, gen, dirs, hist,
+                                stats=self._merged_stats(
+                                    meta, self._record_sizes(path, rels),
+                                    dirs, hist, path=path),
+                                schema=msch)
+            self._sweep_dropped(
+                path, meta, dirs | {d for h in hist for d in h["dirs"]})
+        else:
+            # legacy in-place commit (no isolation): closed rows FIRST
+            # (idempotent token-keyed partition), open overwrite second
+            # — a crash between the two leaves old rows open alongside
+            # their closed copies; retrying the same batch converges.
+            self._write_tagged(tagged.where(F.col("__closed")), path,
+                               buckets)
+            self._write_tagged(tagged.where(~F.col("__closed")), path,
+                               buckets, open_batch="open")
+        if self.auto_compact_batches:
+            if meta is not None:
+                # count only SMALL tokens (manifest-recorded sizes, no
+                # listing): consolidated levels above the tier threshold
+                # are already compacted and must not re-trigger an
+                # O(|history|) rewrite every commit
+                fresh = self._manifest(path)
+                n = sum(s <= self.compact_small_bytes for s in
+                        self._history_token_sizes(path, fresh).values())
+            else:
+                n = len({d.rsplit("/", 1)[-1]
+                         for d in self._closed_batch_dirs(path)})
+            if n > self.auto_compact_batches:
+                self.compact(cube)
 
     def _history_replace_manifested(
         self, path: str, incoming: DataFrame, cols: list[str],
         buckets: int | None, meta: dict, raw_manifest: str,
-        timepart: str | None = None, keep: int = 0,
-        schema: dict | None = None,
+        hit: dict[int, set[int]], timepart: str | None = None,
+        keep: int = 0, schema: dict | None = None,
     ) -> None:
         """Bounded, snapshot-isolated history import: rewrite ONLY the
         oid-bucket directories containing incoming oids (reference
@@ -4035,24 +4005,23 @@ class Engine:
         never both. Unbucketed manifested cubes take the same path with
         the whole table as the single 'bucket'.
 
+        ``incoming`` must be a projection of the commit's checkpointed
+        batch and ``hit`` its profiled bucket values per modulus (see
+        ``_profile_batch``): a nondeterministic source recomputed
+        between the profile and the write could land rows in a bucket
+        outside ``hit``, whose rewrite would then drop every other
+        oid's rows there (kept is pruned to hit buckets only).
+
         Crash-convergent under the single-writer lease: the union write
         is deterministic from (manifested state minus incoming oids) +
         incoming, and the generation number doesn't advance until the
         flip — a retry recomputes the identical directories; stranded
         ones stay unreferenced and are swept by the next commit."""
-        # materialize incoming ONCE: the hit-bucket collect, the batch
-        # token and the union write would otherwise re-execute its plan —
-        # and a nondeterministic source (sample/limit) recomputed between
-        # the collect and the write could land rows in a bucket outside
-        # `hit`, whose rewrite would then drop every other oid's rows
-        # there (kept was pruned to hit buckets only)
-        incoming = incoming.localCheckpoint(eager=True)
         gen = meta["gen"] + 1
         live = set(meta["dirs"])
         part_cols = self._partition_keys(buckets, timepart)
         raw = self._read_raw(path)
-        mig = meta.get("migration")
-        if buckets and mig:
+        if buckets and meta.get("migration"):
             # migration-aware: an incoming oid's stored versions live
             # in dirs at ANY modulus still present (chained doublings
             # included) — resolve the replaced DIRECTORIES per vintage
@@ -4061,15 +4030,13 @@ class Engine:
             # the live modulus migrates the hit old dirs as a side
             # effect.
             replaced_dirs = self._migration_hit_dirs(
-                incoming, meta, buckets, live, current_only=False)
+                hit, meta, buckets, live, current_only=False)
             pruned = (self._read_dirs(path, meta, sorted(replaced_dirs))
                       if replaced_dirs else raw.where(F.lit(False)))
         elif buckets:
-            ob = self._obucket(buckets)
-            hit = sorted(r["b"] for r in
-                         incoming.select(ob.alias("b")).distinct().collect())
-            pruned = raw.where(F.col("__obucket").isin(hit))
-            hit_set = {f"__obucket={b}" for b in hit}
+            hb = sorted(hit[buckets])
+            pruned = raw.where(F.col("__obucket").isin(hb))
+            hit_set = {f"__obucket={b}" for b in hb}
             replaced_dirs = {d for d in live
                              if d.split("/")[1] in hit_set}
         else:
@@ -4096,19 +4063,13 @@ class Engine:
             "__batch",
             F.when(F.col("_current"), F.lit(f"open-g{gen}"))
             .otherwise(F.lit(f"hr-g{gen}")))
-        if buckets:
-            union = union.withColumn("__obucket", self._obucket(buckets))
-        if timepart:
-            union = union.withColumn("__stime", self._stime_col(timepart))
+        union = self._with_part_cols(union, buckets, timepart)
+        # localCheckpoint: the write lands under the same root the plan
+        # reads from, and the stats below must see the rows it wrote
         union = union.select(*cols, *part_cols).localCheckpoint(eager=True)
-        (
-            self._cube_writer(union).mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
+        self._write_dirs(union, path, buckets, timepart)
         new_rels = self._record_sizes(
-            path, self._written_dir_stats(union, buckets, timepart))
+            path, self._written_dir_stats(union, buckets, timepart)[1])
         dirs = (live - replaced_dirs) | set(new_rels)
         hist = self._push_history(meta, keep)
         self._manifest_flip(path, raw_manifest, gen, dirs, hist,

@@ -142,18 +142,33 @@ def stamp(
     return work
 
 
-def validate(df: DataFrame) -> None:
-    """Cheap invariant checks (reference asserts per object,
-    ``core_api.py:76-77,114-115``): raises on null ``_oid`` or
-    ``_end < _start``. One aggregate pass, no collect of data rows."""
-    bad = df.select(
+def invariant_counts() -> list[Column]:
+    """The batch invariants (reference asserts per object,
+    ``core_api.py:76-77,114-115``) as aggregate expressions: the count
+    of null ``_oid`` rows (``null_oid``) and of ``_end < _start`` rows
+    (``bad_interval``). Aggregates, so a caller can fold them into a
+    grouped pass it already runs (the engine's commit profile) instead
+    of paying a job of their own."""
+    return [
         F.sum(F.col("_oid").isNull().cast("int")).alias("null_oid"),
-        F.sum((F.col("_end") < F.col("_start")).cast("int")).alias("bad_interval"),
-    ).first()
-    if bad["null_oid"]:
-        raise ValueError(f"{bad['null_oid']} objects with null _oid")
-    if bad["bad_interval"]:
-        raise ValueError(f"{bad['bad_interval']} objects with _end < _start")
+        F.sum((F.col("_end") < F.col("_start")).cast("int"))
+        .alias("bad_interval"),
+    ]
+
+
+def check_invariants(null_oid: int | None, bad_interval: int | None) -> None:
+    """Raise on the counts ``invariant_counts`` produced (None = 0)."""
+    if null_oid:
+        raise ValueError(f"{null_oid} objects with null _oid")
+    if bad_interval:
+        raise ValueError(f"{bad_interval} objects with _end < _start")
+
+
+def validate(df: DataFrame) -> None:
+    """Cheap invariant checks: raises on null ``_oid`` or
+    ``_end < _start``. One aggregate pass, no collect of data rows."""
+    bad = df.select(*invariant_counts()).first()
+    check_invariants(bad["null_oid"], bad["bad_interval"])
 
 
 def assign_autoincrement(df: DataFrame, col: str = "id",

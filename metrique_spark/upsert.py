@@ -15,15 +15,27 @@ Reference semantics (``metrique/sqlalchemy.py:906-975``):
   (``:910-915``).
 
 Scale design — the cube table is parquet partitioned by a ``_current``
-boolean:
+boolean (then oid bucket, period and a ``__batch`` directory key):
 
-- snapshot upsert touches ONLY the ``_current=true`` partition (read it,
-  merge, dynamically overwrite it) and *appends* newly-closed rows to the
-  history partition. History — the ever-growing bulk at 100 TB — is never
-  rewritten on the hot path.
+- snapshot upsert touches ONLY the open directories of the oid buckets
+  the batch hits (read them, merge, rewrite them as fresh generation
+  directories) and writes newly-closed rows into a new history
+  directory keyed by their content token. History — the ever-growing
+  bulk at 100 TB — is never rewritten on the hot path.
 - the merge itself is one join on ``_oid``. The incoming batch is typically
   small relative to the table, so it is broadcast when under the threshold;
   otherwise AQE picks the strategy.
+- a commit on a manifested cube (``Engine._upsert_locked``) runs five
+  Spark actions, whatever the batch size: checkpoint the batch →
+  profile it (ONE aggregate: invariants, autosnap detection, hit
+  buckets) → merge and checkpoint (``snapshot_merge_tagged``) → stats
+  (ONE aggregate grouped by output directory: rows, ``max(_end)``,
+  ``min(_start)`` and the closed rows' token checksum) → ONE
+  partitioned write of closed and open rows together, then the
+  manifest pointer flip. That is 9 Spark jobs for a trickle commit on a
+  bucketed cube (it was 17 when each step ran its own action). The
+  legacy unmanifested layout keeps two ordered writes (closed first,
+  open second), which its crash convergence depends on.
 - on a production cluster this maps 1:1 onto a Delta Lake ``MERGE INTO``
   (close-then-insert two-action merge); the parquet implementation keeps the
   same logical plan without requiring the Delta runtime in this container.
@@ -62,12 +74,6 @@ def latest_per_oid(incoming: DataFrame) -> DataFrame:
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def detect_autosnap(incoming: DataFrame) -> bool:
-    """True iff all incoming objects are current versions (reference
-    ``sqlalchemy.py:910-915``)."""
-    return incoming.where(F.col("_end").isNotNull()).isEmpty()
 
 
 def snapshot_merge_tagged(open_rows: DataFrame, incoming: DataFrame) -> DataFrame:

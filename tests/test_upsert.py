@@ -125,18 +125,20 @@ def test_null_hash_upsert_does_not_drop_objects(spark, engine):
 
 def test_crash_between_closed_and_open_writes_recovers(spark, engine, monkeypatch):
     """A crash mid-commit must leave readers on EXACTLY the previous
-    generation (the closed-row write landed on disk but the manifest
-    pointer never flipped — snapshot isolation), and retrying the same
-    batch converges to the crash-free state (the gen didn't advance, so
-    the retry overwrites the same unreferenced directories)."""
+    generation (the commit's closed and open rows landed on disk but the
+    manifest pointer never flipped — snapshot isolation), and retrying
+    the same batch converges to the crash-free state (the gen didn't
+    advance, so the retry overwrites the same unreferenced directories)."""
     engine.upsert("cr", _objs(spark, [(1, 10), (2, 20)], "2014-01-01"), stamped=True)
 
-    # inject a crash AFTER the closed-row write, BEFORE the open write
-    def boom(self, df, path, buckets=None, open_batch="open",
-             timepart=None):
+    # inject a crash AFTER the commit's data write, BEFORE the flip
+    orig = Engine._write_tagged
+
+    def boom(self, *a, **kw):
+        orig(self, *a, **kw)
         raise RuntimeError("injected crash")
 
-    monkeypatch.setattr(Engine, "_write_open", boom)
+    monkeypatch.setattr(Engine, "_write_tagged", boom)
     batch = _objs(spark, [(1, 11)], "2014-02-01")
     with pytest.raises(RuntimeError, match="injected crash"):
         engine.upsert("cr", batch, stamped=True)
@@ -178,15 +180,19 @@ def test_idempotency_token_is_distributed(spark, engine):
     engine.upsert("tok", _objs(spark, [(1, 10)], "2014-01-01"), stamped=True)
     closed = engine.table("tok").where("_end is not null")
     captured = {}
-    orig_agg = type(closed).agg
+    # the token is one column of the commit's grouped stats aggregate
+    grouped = type(closed.groupBy("_oid"))
+    orig_agg = grouped.agg
 
     def spy_agg(self, *exprs):
         out = orig_agg(self, *exprs)
-        captured["plan"] = out._jdf.queryExecution().analyzed().toString()
+        plan = out._jdf.queryExecution().analyzed().toString()
+        if "xxhash64" in plan:
+            captured["plan"] = plan
         return out
 
     import unittest.mock as mock
-    with mock.patch.object(type(closed), "agg", spy_agg):
+    with mock.patch.object(grouped, "agg", spy_agg):
         engine.upsert("tok", _objs(spark, [(1, 11)], "2014-02-01"),
                       stamped=True)
     plan = captured["plan"]
