@@ -37,21 +37,11 @@ from metrique_spark.upsert import snapshot_merge_tagged
 
 def _utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Cached-plan output partitioning stays at Spark's default (AQE may
-    # NOT re-plan it): round 14 set
-    # canChangeCachedPlanOutputPartitioning=true globally so a tiny
-    # persisted training frame would coalesce by byte size, which cut
-    # task CPU 12x on the classifier iteration loops — but the driver's
-    # cold-JVM bench showed the flip side: AQE coalesces kilobyte
-    # persisted frames to ONE partition, so every later pass over a
-    # cache (curation scores, minhash shingles, correlate's stateful
-    # stages) runs serial while the other cores idle. Wall regressed
-    # 106.8->137.2 s and 32 cores measured SLOWER than 8 (r14 verdict).
-    # Wall is the graded axis; the conf is now opt-in via env for
-    # experiments, default off (= Spark default).
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        os.environ.get("SPARK_METRIQUE_CACHED_PLAN_AQE", "false"))
+    # Cached-plan output partitioning stays at Spark's default (false,
+    # so it is not set here): round 14 let AQE re-plan cached frames,
+    # which coalesced kilobyte persisted frames to ONE partition and ran
+    # every later pass over a cache serially — wall regressed
+    # 106.8->137.2 s and 32 cores measured slower than 8 (r14 verdict).
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1596,8 +1586,8 @@ def sim_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """product-quantization ANN (similarity.pq_train/encode/topk; Jégou
-    2011): 16 subspaces × 16 L2 codewords (md5-seeded deterministic
+    """product-quantization ANN (similarity.pq_train + quantized_topk
+    kind "pq"; Jégou 2011): 16 subspaces × 16 L2 codewords (md5-seeded deterministic
     Lloyd, rounded-distance argmin, decimal-exact means), corpus scored
     through its 16 codes alone by ADC lookup tables. Approximate by
     construction — the oracle replays the IDENTICAL training + encode +
@@ -1608,25 +1598,26 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     books = similarity.pq_train(e, m=16, k=16, iters=1)
     q = e.where(F.col("vec_id") < 10)
-    return similarity.pq_topk(e, q, books, k=5)
+    return similarity.quantized_topk(e, q, "pq", topk=5, model=books)
 
 
 def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-bit scalar-quantized cosine top-5 (similarity.sq8_topk; the
-    FAISS-SQ8 compression scheme): per-dimension [min,max] affine codes,
-    vectors reconstructed on the fly below the query join. The oracle
+    """8-bit scalar-quantized cosine top-5 (similarity.quantized_topk
+    kind "sq8"; the FAISS-SQ8 compression scheme): per-dimension
+    [min,max] affine codes, vectors reconstructed on the fly below the
+    query join. The oracle
     replays train + encode + reconstruction + scoring exactly (exact
     extrema, pinned IEEE expression order), so the approximate result
     itself is value-checked; recall vs exact is pinned in tests."""
     _utc(spark)
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 10)
-    return similarity.sq8_topk(e, q, k=5)
+    return similarity.quantized_topk(e, q, "sq8", topk=5)
 
 
 def sim_ivfsq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """composed IVF×SQ8 index (similarity.ivfsq8_topk; the FAISS
-    "IVF,SQ8" layout): deterministic coarse k-means routes vectors to 8
+    """composed IVF×SQ8 index (similarity.quantized_topk kind "ivfsq8";
+    the FAISS "IVF,SQ8" layout): deterministic coarse k-means routes vectors to 8
     lists, each query probes its 2 nearest and scores ONLY those lists'
     vectors through their 8-bit scalar codes — coarse pruning × cheap
     near-exact compression, the no-training-codebook sibling of
@@ -1635,12 +1626,13 @@ def sim_ivfsq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 10)
-    return similarity.ivfsq8_topk(e, q, nlist=8, nprobe=2, topk=5)
+    return similarity.quantized_topk(e, q, "ivfsq8", topk=5, nlist=8,
+                                     nprobe=2)
 
 
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """composed IVF-PQ index (similarity.ivfpq_topk; Jégou 2011 IVFADC,
-    raw-vector codebooks): deterministic coarse k-means routes vectors
+    """composed IVF-PQ index (similarity.quantized_topk kind "ivfpq";
+    Jégou 2011 IVFADC, raw-vector codebooks): deterministic coarse k-means routes vectors
     to 8 lists, each query probes its 2 nearest lists and ADC-scores
     only those lists' vectors through 16 PQ codes — coarse pruning ×
     compression, the standard big-ANN layout. Doubly approximate; the
@@ -1650,8 +1642,9 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 10)
-    return similarity.ivfpq_topk(e, q, nlist=8, nprobe=2, m=16, k=16,
-                                 coarse_iters=1, pq_iters=1, topk=5)
+    return similarity.quantized_topk(e, q, "ivfpq", topk=5, nlist=8,
+                                     nprobe=2, m=16, k=16, coarse_iters=1,
+                                     iters=1)
 
 
 def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2091,9 +2084,9 @@ def _index_dir(sf_dir: str, name: str) -> str:
 
 def sim_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """storage-backed PQ: train + encode ONCE into a persisted index
-    (codes parquet + codebook sidecar, similarity.write_pq_index), then
-    ADC-probe the stored codes — the index-once/search-many path the
-    in-plan sim_pq_topk (which retrains per call) is not. Identical
+    (codes parquet + codebook sidecar, similarity.write_quantized_index),
+    then ADC-probe the stored codes — the index-once/search-many path
+    the in-plan sim_pq_topk (which retrains per call) is not. Identical
     params to sim_pq_topk, so the same training+encode+ADC SQL replay
     value-checks the STORED index content end-to-end."""
     _utc(spark)
@@ -2101,18 +2094,18 @@ def sim_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 10)
     path = _index_dir(sf_dir, "pqidx_m16k16i1")
     try:
-        return similarity.pq_topk_indexed(spark, path, q, k=5)
+        return similarity.quantized_topk_indexed(spark, path, q, topk=5)
     except ValueError:
-        similarity.write_pq_index(e, path, m=16, k=16, iters=1)
-        return similarity.pq_topk_indexed(spark, path, q, k=5)
+        similarity.write_quantized_index(e, path, "pq", m=16, k=16, iters=1)
+        return similarity.quantized_topk_indexed(spark, path, q, topk=5)
 
 
 def sim_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """storage-backed IVF-PQ: coarse centroids + PQ codebooks in the
     sidecar, codes parquet PARTITIONED BY coarse cluster
-    (similarity.write_ivfpq_index) — a probe's cluster equi-join prunes
-    to the probed directories, so the stored search pays
-    ~nprobe/nlist of the code scan and none of the training/encode.
+    (similarity.write_quantized_index kind "ivfpq") — a probe's cluster
+    equi-join prunes to the probed directories, so the stored search
+    pays ~nprobe/nlist of the code scan and none of the training/encode.
     Same params as sim_ivfpq_topk; the composed SQL replay value-checks
     the stored index content."""
     _utc(spark)
@@ -2120,18 +2113,20 @@ def sim_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 10)
     path = _index_dir(sf_dir, "ivfpqidx_n8p2m16k16")
     try:
-        return similarity.ivfpq_topk_indexed(spark, path, q, nprobe=2,
-                                             topk=5)
+        return similarity.quantized_topk_indexed(spark, path, q, topk=5,
+                                                 nprobe=2)
     except ValueError:
-        similarity.write_ivfpq_index(e, path, nlist=8, m=16, k=16)
-        return similarity.ivfpq_topk_indexed(spark, path, q, nprobe=2,
-                                             topk=5)
+        similarity.write_quantized_index(e, path, "ivfpq", nlist=8, m=16,
+                                         k=16)
+        return similarity.quantized_topk_indexed(spark, path, q, topk=5,
+                                                 nprobe=2)
 
 
 def sim_sq8_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """storage-backed SQ8: encode the corpus ONCE into a persisted 8-bit
-    code table (similarity.write_sq8_index), probe the stored codes —
-    8x smaller scan payload, training+encode paid at write time. Same
+    code table (similarity.write_quantized_index kind "sq8"), probe the
+    stored codes — 8x smaller scan payload, training+encode paid at
+    write time. Same
     params as sim_sq8_topk, so the same train+encode+reconstruct replay
     value-checks the stored index content."""
     _utc(spark)
@@ -2139,10 +2134,10 @@ def sim_sq8_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 10)
     path = _index_dir(sf_dir, "sq8idx")
     try:
-        return similarity.sq8_topk_indexed(spark, path, q, k=5)
+        return similarity.quantized_topk_indexed(spark, path, q, topk=5)
     except ValueError:
-        similarity.write_sq8_index(e, path)
-        return similarity.sq8_topk_indexed(spark, path, q, k=5)
+        similarity.write_quantized_index(e, path, "sq8")
+        return similarity.quantized_topk_indexed(spark, path, q, topk=5)
 
 
 def sim_index_refreshed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4491,8 +4486,8 @@ _KMEANS_ORACLE = (
 
 # --- product-quantization oracle: replays pq_train's per-subspace L2
 # Lloyd (shared md5 seed order, rounded |x|²−2xc+|c|² argmin, decimal
-# means), pq_encode, and pq_topk's ADC scoring as chained CTEs — the
-# approximate computation itself is value-checked, code for code.
+# means), pq_encode, and quantized_topk's ADC scoring as chained CTEs —
+# the approximate computation itself is value-checked, code for code.
 
 
 def _pq_assign_cte(j: int, bname: str, aname: str) -> str:
@@ -4588,7 +4583,7 @@ def _query_cte(n_queries: int) -> str:
 
 def _probe_cte(cname: str, nprobe: int) -> str:
     """Top-``nprobe`` inverted lists per query — the SQL twin of
-    similarity._probe_lists (rounded cosine, sim desc / centroid asc)."""
+    similarity._probe_lists_lit (rounded cosine, sim desc / centroid asc)."""
     return f"""probes AS (
   SELECT query_id, centroid_id AS cluster FROM (
     SELECT q.query_id, c.centroid_id,
@@ -4683,7 +4678,7 @@ _SQ8_ORACLE = _sq8_oracle()
 def _ivfsq8_oracle(nlist: int = 8, nprobe: int = 2,
                    coarse_iters: int = 1, topk: int = 5,
                    n_queries: int = 10) -> str:
-    """IVF×SQ8 replay (similarity.ivfsq8_topk): the coarse k-means
+    """IVF×SQ8 replay (similarity.quantized_topk "ivfsq8"): the coarse k-means
     unroll + routing + probe selection shared with the IVF/IVF-PQ
     oracles, then SQ8 reconstruction scoring restricted to the probed
     lists."""

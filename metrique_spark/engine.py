@@ -810,15 +810,14 @@ class Engine:
         return out
 
     # -- vector (ANN) indexes ------------------------------------------------
-    # The similarity module's persisted index family (IVF / PQ / IVF-PQ /
-    # SQ8), managed under the cube's directory with the warehouse's own
-    # protocols: built under the writer lease from the COMMITTED
-    # generation, stamped with that generation number, and checked for
-    # staleness at search time against the live manifest pointer — a
-    # search against an index built before the corpus changed fails loud
-    # instead of silently returning neighbors from a superseded corpus.
-
-    _ANN_KINDS = ("ivf", "pq", "ivfpq", "sq8")
+    # The similarity module's stored index kinds (IVF / PQ / IVF-PQ /
+    # SQ8, driven through its ``ANN_FAMILIES`` table), managed under the
+    # cube's directory with the warehouse's own protocols: built under
+    # the writer lease from the COMMITTED generation, stamped with that
+    # generation number, and checked for staleness at search time
+    # against the live manifest pointer — a search against an index
+    # built before the corpus changed fails loud instead of silently
+    # returning neighbors from a superseded corpus.
 
     def _ann_path(self, cube: str, name: str) -> str:
         # underscore prefix: invisible to Spark's parquet discovery, so
@@ -869,16 +868,18 @@ class Engine:
 
         from metrique_spark.functions import similarity as _sim
 
-        if kind not in self._ANN_KINDS:
+        fam = _sim.ANN_FAMILIES.get(kind)
+        if fam is None:
             raise ValueError(
                 f"unknown vector-index kind {kind!r}; one of "
-                f"{self._ANN_KINDS}")
-        if kind == "sq8" and params:
-            # sq8 has no tuning knobs; recording ignored params in the
-            # marker would report configuration that was never applied
+                f"{tuple(_sim.ANN_FAMILIES)}")
+        if set(params) - fam.params:
+            # checked before the old build is cleared; recording ignored
+            # params in the marker would report configuration that was
+            # never applied
             raise TypeError(
-                f"sq8 vector indexes take no extra params, got "
-                f"{sorted(params)}")
+                f"{kind} vector indexes take no params "
+                f"{sorted(set(params) - fam.params)}")
         path = self._path(cube)
         with self._write_lock(cube):
             meta = self._manifest(path)
@@ -910,46 +911,16 @@ class Engine:
                 # would otherwise leave the old family's data AND its
                 # own committed-looking sidecar behind
                 self.fs.delete_dir(apath)
-            if kind == "ivf":
-                _sim.write_ivf_index(df, apath, id_col=id_col,
-                                     vec_col=vec_col, **params)
-            elif kind == "pq":
-                _sim.write_pq_index(df, apath, id_col=id_col,
-                                    vec_col=vec_col, fs=self.fs, **params)
-            elif kind == "ivfpq":
-                _sim.write_ivfpq_index(df, apath, id_col=id_col,
-                                       vec_col=vec_col, fs=self.fs,
-                                       **params)
-            else:
-                _sim.write_sq8_index(df, apath, id_col=id_col,
-                                     vec_col=vec_col, fs=self.fs)
+            fam.write(df, apath, id_col=id_col, vec_col=vec_col,
+                      fs=self.fs, **params)
             # build-time drift baseline: the same distribution-fit
             # statistic refresh will compute over appended deltas (see
             # similarity.drift_stat) recorded against the corpus the
-            # model was TRAINED on — one extra map-only pass at build
-            # (sq8's clip fraction is 0 by construction: the params ARE
-            # the corpus extrema, so no job at all)
-            if kind == "sq8":
-                dmetric, dval = "clip_frac", 0.0
-            elif kind == "ivf":
-                cent_rows = sorted(
-                    (r["centroid_id"], list(r["cvec"])) for r in
-                    self.spark.read.parquet(apath + "/centroids")
-                    .collect())
-                dmetric, dval = _sim.drift_stat(df, "ivf", vec_col,
-                                                centroids=cent_rows)
-            else:
-                pmeta = json.loads(
-                    self.fs.read_text(self.fs.join(apath, "_pq.json")))
-                if kind == "ivfpq":
-                    dmetric, dval = _sim.drift_stat(
-                        df, "ivfpq", vec_col,
-                        centroids=[(c[0], list(c[1]))
-                                   for c in pmeta["centroids"]],
-                        decimals=pmeta.get("sim_decimals", 6))
-                else:
-                    dmetric, dval = _sim.drift_stat(df, "pq", vec_col,
-                                                    books=pmeta["books"])
+            # model was TRAINED on — one extra map-only pass at build,
+            # none when the family knows its baseline by construction
+            dmetric, dval = fam.build_drift or _sim.drift_stat(
+                df, kind, vec_col,
+                **fam.drift_args(self.spark, apath, self.fs))
             body = {"kind": kind, "gen": gen, "vec_col": vec_col,
                     "id_col": id_col, "params": params,
                     "auto": bool(auto_refresh),
@@ -1066,24 +1037,10 @@ class Engine:
                 "generation retained), re-run build_vector_index, or "
                 "pass allow_stale=True to search the superseded corpus "
                 "deliberately")
-        apath = self._ann_path(cube, name)
-        kind = m["kind"]
-        if kind == "ivf":
-            assigned, centroids = _sim.read_ivf_index(self.spark, apath)
-            return _sim.ivf_topk_indexed(
-                assigned, centroids, queries, k=k,
-                nprobe=nprobe if nprobe is not None else 4,
-                id_col=m["id_col"], vec_col=m["vec_col"])
-        if kind == "pq":
-            return _sim.pq_topk_indexed(self.spark, apath, queries, k=k,
-                                        vec_col=m["vec_col"], fs=self.fs)
-        if kind == "ivfpq":
-            kw = {} if nprobe is None else {"nprobe": nprobe}
-            return _sim.ivfpq_topk_indexed(self.spark, apath, queries,
-                                           topk=k, vec_col=m["vec_col"],
-                                           fs=self.fs, **kw)
-        return _sim.sq8_topk_indexed(self.spark, apath, queries, k=k,
-                                     vec_col=m["vec_col"], fs=self.fs)
+        return _sim.ANN_FAMILIES[m["kind"]].search(
+            self.spark, self._ann_path(cube, name), queries, k=k,
+            nprobe=nprobe, id_col=m["id_col"], vec_col=m["vec_col"],
+            fs=self.fs)
 
     def refresh_vector_index(self, cube: str, name: str,
                              drift_tol: float | None = None) -> dict:
@@ -1165,39 +1122,28 @@ class Engine:
             newc = _cur(self._read(path)).select(id_col, vec_col)
             apath0 = self._ann_path(cube, name)
             # diff the live corpus against the INDEX'S OWN CONTENT —
-            # IVF stores raw vectors (compare directly); the PQ families
-            # store a per-row vector fingerprint (__vh, see
+            # IVF stores raw vectors (compare directly); the quantized
+            # kinds store a per-row vector fingerprint (__vh, see
             # similarity._vh) — so no retained generation is needed and
             # the refresh is self-healing (a drifted or double-appended
             # id converges back to exactly the live row). Only a legacy
             # fingerprint-less PQ index falls back to time-traveling the
             # cube to the indexed generation.
-            pmeta = None
-            if m["kind"] == "ivf":
-                idx = (self.spark.read.parquet(apath0 + "/vectors")
+            fam = _sim.ANN_FAMILIES[m["kind"]]
+            src = fam.diff_source(self.spark, apath0, id_col, vec_col,
+                                  self.fs)
+            if src is None:
+                # pre-fingerprint layout: codes can't be compared to
+                # vectors, so diff against the retained generation —
+                # raises with the keep_generations hint when swept
+                # (rebuild once to gain the fingerprint layout)
+                idx = (_cur(self._read(path, generation=m["gen"]))
                        .select(F.col(id_col).alias("__iid"),
-                               F.col("v").alias("__iv")))
+                               F.col(vec_col).alias("__iv")))
                 same = ((F.col(id_col) == F.col("__iid"))
-                        & F.col(vec_col).cast("array<double>")
-                        .eqNullSafe(F.col("__iv")))
+                        & F.col(vec_col).eqNullSafe(F.col("__iv")))
             else:
-                codes, pmeta = _sim.read_pq_index(self.spark, apath0,
-                                                  fs=self.fs)
-                if pmeta.get("vh"):
-                    idx = codes.select(F.col(id_col).alias("__iid"),
-                                       F.col("__vh").alias("__ivh"))
-                    same = ((F.col(id_col) == F.col("__iid"))
-                            & (_sim._vh(vec_col) == F.col("__ivh")))
-                else:
-                    # pre-fingerprint layout: codes can't be compared to
-                    # vectors, so diff against the retained generation —
-                    # raises with the keep_generations hint when swept
-                    # (rebuild once to gain the fingerprint layout)
-                    idx = (_cur(self._read(path, generation=m["gen"]))
-                           .select(F.col(id_col).alias("__iid"),
-                                   F.col(vec_col).alias("__iv")))
-                    same = ((F.col(id_col) == F.col("__iid"))
-                            & F.col(vec_col).eqNullSafe(F.col("__iv")))
+                idx, same = src
             # changed/new: live rows with no identical (id, vec) in the
             # index; superseded: indexed entries no longer matching a
             # live row — a changed id lands in both (remove + re-append)
@@ -1228,20 +1174,9 @@ class Engine:
                 self.fs.write_text(ipath, json.dumps(
                     {"op": "refresh", "target_gen": live}))
             if n_del:
-                if m["kind"] == "ivf":
-                    _sim.remove_from_ivf_index(self.spark, apath, sup,
-                                               id_col=id_col, fs=self.fs)
-                else:
-                    _sim.remove_from_pq_index(self.spark, apath, sup,
-                                              fs=self.fs)
+                fam.remove(self.spark, apath, sup, id_col, self.fs)
             if n_add:
-                if m["kind"] == "ivf":
-                    _sim.append_to_ivf_index(changed, apath,
-                                             id_col=id_col,
-                                             vec_col=vec_col)
-                else:
-                    _sim.append_to_pq_index(changed, apath,
-                                            vec_col=vec_col, fs=self.fs)
+                fam.append(changed, apath, id_col, vec_col, self.fs)
             # drift signal over the APPENDED delta (frozen-model refresh
             # never retrains — recall decays silently as the
             # distribution shifts, so measure it): compare the same
@@ -1256,26 +1191,9 @@ class Engine:
             if drift_tol is None:
                 drift_tol = m.get("drift_tol")  # per-index tolerance
             if n_add and base is not None:
-                if m["kind"] == "ivf":
-                    cents = sorted(
-                        (r["centroid_id"], list(r["cvec"])) for r in
-                        self.spark.read.parquet(apath0 + "/centroids")
-                        .collect())
-                    dm, dv = _sim.drift_stat(changed, "ivf", vec_col,
-                                             centroids=cents)
-                elif m["kind"] == "ivfpq":
-                    dm, dv = _sim.drift_stat(
-                        changed, "ivfpq", vec_col,
-                        centroids=[(c[0], list(c[1]))
-                                   for c in pmeta["centroids"]],
-                        decimals=pmeta.get("sim_decimals", 6))
-                elif m["kind"] == "sq8":
-                    dm, dv = _sim.drift_stat(
-                        changed, "sq8", vec_col,
-                        params=[(p[0], p[1]) for p in pmeta["params"]])
-                else:
-                    dm, dv = _sim.drift_stat(changed, "pq", vec_col,
-                                             books=pmeta["books"])
+                dm, dv = _sim.drift_stat(
+                    changed, m["kind"], vec_col,
+                    **fam.drift_args(self.spark, apath0, self.fs))
                 if dm == "centroid_sim":
                     tol = 0.15 if drift_tol is None else drift_tol
                     rec = dv is not None and dv < base - tol
@@ -1289,13 +1207,12 @@ class Engine:
                 drift = {"metric": dm, "baseline": base, "appended": dv,
                          "tolerance": tol,
                          "rebuild_recommended": bool(rec)}
-                if m["kind"] in ("ivf", "ivfpq"):
+                if fam.lists:
                     # post-refresh inverted-list balance (report-only:
                     # the documented rebuild trigger "bucket sizes
                     # skew", now measured — max/mean over the slim
                     # partition key, one combinable aggregate)
-                    key = "bucket" if m["kind"] == "ivf" else "cluster"
-                    sub = "/vectors" if m["kind"] == "ivf" else "/codes"
+                    key, sub = fam.lists
                     srow = (self.spark.read.parquet(apath0 + sub)
                             .groupBy(key).count()
                             .agg((F.max("count")
@@ -1340,31 +1257,9 @@ class Engine:
         IVF (both are 1 in the fully-compacted state, so the
         auto-compaction trigger converges instead of re-firing). Listing
         cost is bounded by buckets × batches."""
-        if kind == "ivf":
-            root = self.fs.join(apath, "vectors")
-            if not self.fs.isdir(root):
-                return 0
-            worst = 0
-            for d in self.fs.listdir(root):
-                p = self.fs.join(root, d)
-                if d.startswith("bucket=") and self.fs.isdir(p):
-                    worst = max(worst, sum(
-                        f.endswith(".parquet")
-                        for f in self.fs.listdir(p)))
-            return worst
-        root = self.fs.join(apath, "codes")
-        if not self.fs.isdir(root):
-            return 0
-        tokens: set[str] = set()
-        for d in self.fs.listdir(root):
-            p = self.fs.join(root, d)
-            if d.startswith("__abatch="):
-                tokens.add(d)
-            elif (d.startswith(("cluster=", "__gbucket="))
-                    and self.fs.isdir(p)):
-                tokens.update(b for b in self.fs.listdir(p)
-                              if b.startswith("__abatch="))
-        return len(tokens)
+        from metrique_spark.functions import similarity as _sim
+
+        return _sim.ANN_FAMILIES[kind].batch_count(self.fs, apath)
 
     def compact_vector_index(self, cube: str, name: str,
                              small_bytes: int | None | object =
@@ -1412,6 +1307,7 @@ class Engine:
                     f"{name!r} (build_vector_index, or a crashed "
                     "build — rebuild)")
             m = json.loads(self.fs.read_text(marker))
+            fam = _sim.ANN_FAMILIES[m["kind"]]
             apath = self._ann_path(cube, name)
             ipath = self._ann_intent_path(cube, name)
             if self.fs.isfile(ipath):
@@ -1441,12 +1337,7 @@ class Engine:
                 if intent.get("op") == "compact":
                     pend = intent.get("pending")
                     if pend is not None:
-                        if m["kind"] == "ivf":
-                            _sim.resume_ivf_compaction(
-                                self.spark, apath, pend, fs=self.fs)
-                        else:
-                            _sim.resume_pq_compaction(
-                                self.spark, apath, pend, fs=self.fs)
+                        fam.resume(self.spark, apath, pend, self.fs)
                         self.fs.delete(ipath)
                     elif intent.get("v", 1) < 2:
                         # group-less compact intent from a PRE-resume
@@ -1468,15 +1359,8 @@ class Engine:
 
             self.fs.write_text(ipath, json.dumps(
                 {"op": "compact", "v": 2}))
-            if m["kind"] == "ivf":
-                removed = _sim.compact_ivf_index(
-                    self.spark, apath, id_col=m["id_col"], fs=self.fs,
-                    small_bytes=small_bytes, record=record)
-            else:
-                removed = _sim.compact_pq_index(self.spark, apath,
-                                                fs=self.fs,
-                                                small_bytes=small_bytes,
-                                                record=record)
+            removed = fam.compact(self.spark, apath, m["id_col"], self.fs,
+                                  small_bytes, record)
             self.fs.delete(ipath)
             return removed
 

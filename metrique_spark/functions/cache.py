@@ -53,6 +53,17 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
         return -1
 
 
+def chunk_bytes(sess, conf: str, default: int) -> int | None:
+    """The per-task byte chunk a width conf holds, or None when the value
+    is zero, negative or not a number — the width helpers then leave the
+    frame untouched instead of raising inside a persist path."""
+    try:
+        chunk = int(sess.conf.get(conf, str(default)))
+    except ValueError:
+        return None
+    return chunk if chunk > 0 else None
+
+
 def narrow_small(df: DataFrame) -> DataFrame:
     """Right-size a small frame that is about to be persisted and then
     re-read by several downstream passes: ``coalesce`` it to
@@ -72,9 +83,9 @@ def narrow_small(df: DataFrame) -> DataFrame:
     sess = df.sparkSession
     cap = sess.sparkContext.defaultParallelism
     size = _leaf_scan_bytes(df)
-    if size <= 0:
+    chunk = chunk_bytes(sess, _CACHE_CHUNK_CONF, _CACHE_CHUNK_DEFAULT)
+    if size <= 0 or chunk is None:
         return df
-    chunk = int(sess.conf.get(_CACHE_CHUNK_CONF, str(_CACHE_CHUNK_DEFAULT)))
     target = max(1, -(-size // chunk))
     if target < cap:
         return df.coalesce(target)

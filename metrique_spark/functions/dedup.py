@@ -171,8 +171,12 @@ def spread_small_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         if size <= 0 or size >= (1 << 50):  # unknown / default-huge
             target = cap
         else:
-            chunk = int(df.sparkSession.conf.get(
-                _SPREAD_CHUNK_CONF, str(_SPREAD_CHUNK_DEFAULT)))
+            from metrique_spark.functions.cache import chunk_bytes
+
+            chunk = chunk_bytes(df.sparkSession, _SPREAD_CHUNK_CONF,
+                                _SPREAD_CHUNK_DEFAULT)
+            if chunk is None:
+                return df
             target = max(1, min(cap, -(-size // chunk)))
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)

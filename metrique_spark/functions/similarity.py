@@ -1,6 +1,9 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, same contract:
+Exact and IVF search over raw vectors, plus the quantized families (PQ,
+SQ8 — flat or IVF-routed) as one (router × codec) pipeline with one
+in-plan scorer, one stored-index writer and one prober; the raw-vector
+paths share the same contract:
 
 - ``cosine_topk`` — exact brute-force: query set × corpus with the dot
   product as ``zip_with``/``aggregate`` higher-order functions (JVM-side,
@@ -15,6 +18,8 @@ Two paths, same contract:
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,12 +79,19 @@ def cosine_topk(
             _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
             decimals))
     )
+    return _rank_topk(scored, k, "sim")
+
+
+def _rank_topk(scored: DataFrame, k: int, score_col: str) -> DataFrame:
+    """Per-query top-``k`` of a scored (query_id, neighbor_id, score)
+    frame, ties to the lower neighbor id — the ranking tail every top-k
+    search shares."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id"))
+        F.col(score_col).desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("__rk", F.row_number().over(w))
         .where(F.col("__rk") <= k)
-        .select("query_id", "neighbor_id", "sim")
+        .select("query_id", "neighbor_id", score_col)
     )
 
 
@@ -445,14 +457,19 @@ def _assign_rounded(
 
     ``vectors``: (__vid, v) · ``centroids``: (centroid_id, cvec).
     Returns (__vid, v, cluster, sim)."""
-    # a centroid frame built by kmeans_fit carries its driver-side list
-    # along — the collect below would be one more sequential job per
-    # assign call for values the driver already holds
-    cents = getattr(centroids, _KMEANS_CENTS_ATTR, None)
-    if cents is None:
-        rows = centroids.select("centroid_id", "cvec").collect()
-        cents = sorted((r["centroid_id"], list(r["cvec"])) for r in rows)
-    return _assign_lit(vectors, cents, sim_decimals)
+    return _assign_lit(vectors, _cent_rows(centroids), sim_decimals)
+
+
+def _cent_rows(centroids: DataFrame) -> list:
+    """Driver-side ``[(cid, vec), ...]`` sorted by cid. A centroid frame
+    built by ``kmeans_fit`` carries this list along, so only a foreign
+    frame pays the collect — one more sequential job per call for values
+    the driver already holds."""
+    rows = getattr(centroids, _KMEANS_CENTS_ATTR, None)
+    if rows is None:
+        rows = sorted((r["centroid_id"], list(r["cvec"])) for r in
+                      centroids.select("centroid_id", "cvec").collect())
+    return rows
 
 
 def _py_norm(vec) -> float:
@@ -848,12 +865,7 @@ def remove_from_pq_index(
     fs = _default_fs(fs)
     codes, meta = read_pq_index(spark, path, fs=fs)
     id_col = meta["id_col"]
-    if meta.get("kind") == "ivfpq":
-        part_cols = ["cluster", "__abatch"]
-    elif meta.get("gbuckets"):
-        part_cols = ["__gbucket", "__abatch"]
-    else:
-        part_cols = ["__abatch"]
+    part_cols = _pq_part_cols(meta)
     rid = ids.select(F.col(ids.columns[0]).alias("__rid")).distinct()
     hit = (codes.join(rid, codes[id_col] == F.col("__rid"), "left_semi")
            .select(*part_cols).distinct())
@@ -916,12 +928,7 @@ def ivf_topk_indexed(
               & (F.col("query_id") != F.col("neighbor_id")))
         .withColumn("sim", F.round(cosine(F.col("qv"), F.col("v")), decimals))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    return _rank_topk(scored, k, "sim")
 
 
 def ivf_knn_join(
@@ -1086,14 +1093,8 @@ def ivf_knn_join(
 
     cand = tagged.groupBy(*group_keys).applyInPandas(
         per_bucket, schema="query_id bigint, neighbor_id bigint, sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.distinct()  # a pair can meet in several probed buckets
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .drop("__rk")
-    )
+    # a pair can meet in several probed buckets
+    return _rank_topk(cand.distinct(), k, "sim")
 
 
 def knn_classify(
@@ -1374,17 +1375,13 @@ def pq_encode(
         F.transform(F.col("__dm"), _argmin_code).alias("codes"))
 
 
-def _pq_query_frame(queries: DataFrame, codebooks: list,
-                    id_col: str, vec_col: str) -> DataFrame:
+def _pq_query_frame(qv: DataFrame, codebooks: list) -> DataFrame:
     """(query_id, __qn, __lut): each query's norm and per-subspace ADC
     lookup tables — one dot per codeword, codebooks as single parsed
-    SQL literals (see _book_lit_sql). Broadcast side of every ADC
-    scorer."""
+    SQL literals (see _book_lit_sql). The broadcast side of the PQ
+    codec; ``qv`` is (query_id, __qv)."""
     m = len(codebooks)
     sub_len = len(codebooks[0][0])
-    qv = _as_double(vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       qv.alias("__qv"))
 
     # one parsed vectors-only literal for ALL books + one two-arg
     # transform (sv bound once per subspace) — identical dot folds to
@@ -1398,13 +1395,19 @@ def _pq_query_frame(queries: DataFrame, codebooks: list,
         _subsv_expr(F.col("__qv"), m, sub_len),
         lambda sv, j: F.transform(F.element_at(allv, j + 1),
                                   lambda cv: _dot(sv, cv)))
-    return q.select("query_id", _norm(F.col("__qv")).alias("__qn"),
-                    luts.alias("__lut"))
+    return qv.select("query_id", _norm(F.col("__qv")).alias("__qn"),
+                     luts.alias("__lut"))
 
 
-def _adc_exprs(codebooks: list):
-    """(numerator, reconstruction-norm²) ADC expressions over a frame
-    carrying ``codes`` and the broadcast ``__lut``."""
+def _adc_score(joined: DataFrame, codebooks: list, id_col: str,
+               decimals: int) -> DataFrame:
+    """Asymmetric distance computation (ADC) over a frame carrying the
+    corpus ``codes`` and the broadcast ``__lut``/``__qn``:
+    ``cos(q, x) ≈ Σ_j lut_j[code_j] / (|q| · |x̃|)`` with ``x̃`` the
+    codebook reconstruction, whose norm² comes from a codeword-norm
+    table and the codes — ``m`` lookup-table reads per pair, never a
+    full-vector dot. Returns (query_id, neighbor_id, score),
+    self-matches excluded."""
     normsq_lit = F.expr("array({})".format(",".join(
         "array({})".format(",".join(
             f"{float(sum(x * x for x in vec))!r}D" for vec in book))
@@ -1417,128 +1420,128 @@ def _adc_exprs(codebooks: list):
         F.zip_with(F.col("codes"), normsq_lit,
                    lambda c, l: F.element_at(l, c + 1)),
         F.lit(0.0), lambda a, x: a + x)
-    return num, rn2
+    return (joined.where(F.col(id_col) != F.col("query_id"))
+            .select("query_id", F.col(id_col).alias("neighbor_id"),
+                    F.round(num / (F.col("__qn") * F.sqrt(rn2)),
+                            decimals).alias("score")))
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks: list,
-    k: int = 5,
+# --- scalar quantization (SQ8): the third standard compression scheme
+# in the big-ANN toolbox (public technique — e.g. FAISS's SQ8): each
+# dimension affinely quantized to an 8-bit code against the corpus's
+# per-dimension [min, max]. 8x smaller scan payload than float64 with
+# near-exact recall at moderate dimensionality — the cheap middle
+# ground between exact cosine (full payload) and PQ (m codes, lossier).
+# Deterministic end-to-end (exact per-dim min/max, fixed rounding,
+# identical IEEE expression order both engines), so the SQL oracle
+# value-replays train + encode + reconstruction + scoring.
+
+
+def sq8_train(
+    df: DataFrame,
+    vec_col: str = "embedding",
+) -> list:
+    """Per-dimension quantization params from the corpus: returns the
+    raw ``[(mn, mx), ...]`` extrema (the derived span/denominator are
+    computed from them in ONE place so the SQL oracle's arithmetic
+    chain is bit-identical). ONE map-side-combinable (dim) shuffle whose
+    result is ``dim`` rows collected to the driver — the corpus never
+    shuffles and the params are literal-sized by construction."""
+    dims = (df.select(F.posexplode(_as_double(vec_col))
+                      .alias("dim", "x"))
+            .groupBy("dim")
+            .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
+            .collect())
+    out = [None] * len(dims)
+    for r in dims:
+        out[r["dim"]] = (float(r["mn"]), float(r["mx"]))
+    return out
+
+
+def _sq8_params_lit(params: list) -> Column:
+    """The per-dim (mn, span, denominator) params as ONE parsed SQL
+    literal (repr round-trips doubles exactly; a nested F.lit build
+    would be py4j-bound — the codebook-literal lesson). ``dn = mx - mn``
+    and ``sp = (mx - mn) / 255`` are evaluated HERE in Python doubles —
+    the exact IEEE chain the oracle's SQL expressions replay."""
+    return F.expr("array({})".format(",".join(
+        f"named_struct('mn',{mn!r}D,'sp',{(mx - mn) / 255.0!r}D,"
+        f"'dn',{mx - mn!r}D)"
+        for mn, mx in params)))
+
+
+def _sq8_rec_frame(codes: DataFrame, params: list, id_col: str,
+                   keep: tuple = ()) -> DataFrame:
+    """(neighbor_id, __rec, __rn2[, keep...]) — reconstruction and its
+    norm materialized ONCE per corpus row (below whatever join scores
+    them). SHARED by the flat and IVF-routed scorers: the expression
+    chain here is what the DuckDB oracles' ``rec`` CTE replays, so both
+    families stay IEEE-identical by construction."""
+    p = _sq8_params_lit(params)
+    rec = F.zip_with(F.col("codes"), p,
+                     lambda c, pp: pp["mn"]
+                     + c.cast("double") * pp["sp"])
+    out = codes.select(
+        F.col(id_col).alias("neighbor_id"), rec.alias("__rec"), *keep)
+    return out.withColumn("__rn2", _dot(F.col("__rec"), F.col("__rec")))
+
+
+def sq8_encode(
+    df: DataFrame,
+    params: list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_decimals: int = 4,
-    max_query_rows: int | None = 10_000,
 ) -> DataFrame:
-    """Approximate cosine top-k by asymmetric distance computation
-    (ADC): the corpus is scored through its codes alone —
-    ``cos(q, x) ≈ Σ_j dot(q_j, codeword_j) / (|q| · |x̃|)`` with ``x̃``
-    the codebook reconstruction — so per (query, vector) the work is
-    ``m`` lookup-table reads, never a full-vector dot. Query lookup
-    tables (m·k dots each) are built once per query on the broadcast
-    side; reconstruction norms come from a codebook-norm table and the
-    codes. Returns ``(query_id, neighbor_id, score)``, self-matches
-    excluded, ties to the lower neighbor id. Approximate by
-    construction — recall rides the bit budget m·log2(k) (pinned by
-    test; note the synthetic gate corpus is near-random, PQ's worst
-    case) — but the SQL oracle replays the identical computation, so
-    value-parity holds exactly.
+    """(id, codes array<int>): each dimension quantized to
+    ``round((x - mn) * 255 / (mx - mn))`` (0 for constant dims) — map-
+    only, params as a literal. The expression order is pinned: the SQL
+    oracle must evaluate the identical IEEE chain for code parity."""
+    p = _sq8_params_lit(params)
+    v = _as_double(vec_col)
+    codes = F.zip_with(
+        v, p,
+        lambda x, pp: F.when(pp["dn"] == 0.0, F.lit(0))
+        .otherwise(F.round((x - pp["mn"]) * 255.0 / pp["dn"], 0)
+                   .cast("int")))
+    from metrique_spark.functions.dedup import spread_small_scan
 
-    COMPRESSION, NOT PRUNING: every code row is scored against every
-    query — the scan is |corpus|·|queries| lookup folds (the rank≤k
-    window is map-side-limited, but the scan cost is real). That is the
-    right trade for a small interactive query batch over a corpus whose
-    float payload doesn't fit; a LARGE query batch belongs on
-    ``ivfpq_topk`` (coarse probes prune the scan to ~nprobe/nlist) or a
-    stored ``write_ivfpq_index`` + ``ivfpq_topk_indexed``. The
-    ``max_query_rows`` guard (one cheap ``limit().count()`` probe on
-    the query side) fails loud instead of silently running the
-    quadratic scan — pass None to override deliberately."""
-    from pyspark import StorageLevel
-
-    from metrique_spark.functions.cache import track
-
-    # persist the codes: the scoring expressions reference them several
-    # times (ADC numerator + reconstruction norm) and the encode argmin
-    # folds are interpreted HOFs — re-inlining them per reference is
-    # the dominant cost. Caller releases via functions.cache.release.
-    codes = narrow_small(pq_encode(corpus, codebooks, id_col=id_col,
-                                   vec_col=vec_col)).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    out = pq_topk_codes(codes, codebooks, queries, k=k, id_col=id_col,
-                        vec_col=vec_col, score_decimals=score_decimals,
-                        max_query_rows=max_query_rows)
-    return track(out, codes)
+    return spread_small_scan(df.select(F.col(id_col),
+                                       codes.alias("codes")))
 
 
-def pq_topk_codes(
-    codes: DataFrame,
-    codebooks: list,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    max_query_rows: int | None = 10_000,
-) -> DataFrame:
-    """ADC top-k against an ALREADY-ENCODED corpus — the scoring half of
-    ``pq_topk``, shared with the storage-backed path
-    (``read_pq_index`` → search): per (query, vector) the work is ``m``
-    lookup-table reads over the ``codes`` column; queries broadcast with
-    their per-subspace LUTs. NOTE this is compression without pruning —
-    every code row is scored per query batch (``max_query_rows`` guards
-    the quadratic scan, see ``pq_topk``); large query batches belong on
-    ``ivfpq_topk``/``ivfpq_topk_indexed`` where coarse probes prune the
-    scan."""
-    from pyspark.sql import Window
-
-    if max_query_rows is not None:
-        nq = queries.limit(max_query_rows + 1).count()
-        if nq > max_query_rows:
-            raise ValueError(
-                f"pq_topk: query side exceeds {max_query_rows} rows — "
-                "the flat ADC scan is |corpus|x|queries|; use "
-                "ivfpq_topk / ivfpq_topk_indexed (coarse probes prune "
-                "the scan), or pass max_query_rows=None to force")
-
-    q = _pq_query_frame(queries, codebooks, id_col, vec_col)
-    num, rn2 = _adc_exprs(codebooks)
-    scored = (codes.crossJoin(F.broadcast(q))
-              .where(F.col(id_col) != F.col("query_id"))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
-                      F.round(num / (F.col("__qn") * F.sqrt(rn2)),
-                              score_decimals).alias("score")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k).drop("__rk"))
+def _sq8_score(joined: DataFrame, params: list, id_col: str,
+               decimals: int) -> DataFrame:
+    """Rounded cosine of each query against the reconstruction over a
+    frame carrying (query_id, neighbor_id, __qv, __qn, __rec, __rn2) —
+    one dot fold per pair. Returns (query_id, neighbor_id, score),
+    self-matches excluded."""
+    return (joined.where(F.col("neighbor_id") != F.col("query_id"))
+            .select("query_id", "neighbor_id",
+                    F.round(_dot(F.col("__qv"), F.col("__rec"))
+                            / (F.col("__qn") * F.sqrt(F.col("__rn2"))),
+                            decimals).alias("score")))
 
 
-def _probe_lists(
-    qv: DataFrame, centroids: DataFrame, nprobe: int, sim_decimals: int
-) -> DataFrame:
-    """Top-``nprobe`` inverted lists per query, by the SAME rounded cosine
-    the corpus assignment used (sort comparator: sim desc, then centroid
-    id asc — the cross-engine-reproducible order). Map-only: the
-    centroids ride into the scan as a driver literal (k·dim doubles) and
-    the selection is an in-row array sort + slice — no join, no window,
-    no shuffle of the query frame.
-
-    ``qv``: (query_id, __qv double array). Returns (query_id, cluster),
-    ``nprobe`` rows per query."""
-    cent_rows = getattr(centroids, _KMEANS_CENTS_ATTR, None)
-    if cent_rows is None:
-        cent_rows = sorted((r["centroid_id"], list(r["cvec"]))
-                           for r in centroids.collect())
-    return _probe_lists_lit(qv, cent_rows, nprobe, sim_decimals)
+# ---------------------------------------------------------------------------
+# the IVF router: a deterministic coarse k-means (``kmeans_fit``) routes
+# every corpus vector to one inverted list (``kmeans_assign``) and each
+# query probes its ``nprobe`` nearest lists (``_probe_lists_lit``), so a
+# search scores ~nprobe/nlist of the corpus.
 
 
 def _probe_lists_lit(
     qv: DataFrame, cent_rows: list, nprobe: int, sim_decimals: int
 ) -> DataFrame:
-    """``_probe_lists`` from a driver-side ``[(cid, vec), ...]`` list —
-    the storage-backed path hands centroids straight from the index
-    sidecar without a DataFrame round-trip."""
+    """Top-``nprobe`` inverted lists per query, by the SAME rounded cosine
+    the corpus assignment used (sort comparator: sim desc, then centroid
+    id asc — the cross-engine-reproducible order). Map-only: the
+    centroids (``cent_rows``, driver-side ``[(cid, vec), ...]`` sorted by
+    cid) ride into the scan as a literal (k·dim doubles) and the
+    selection is an in-row array sort + slice — no join, no window, no
+    shuffle of the query frame.
+
+    ``qv``: (query_id, __qv double array). Returns (query_id, cluster),
+    ``nprobe`` rows per query."""
     cent_lit = F.array(*[
         F.struct(F.lit(cid).alias("cid"),
                  F.expr("array({})".format(",".join(
@@ -1578,8 +1581,8 @@ def ivf_topk_rounded(
     sim_decimals: int = 6,
 ) -> DataFrame:
     """IVF top-k on RAW vectors with the deterministic, cross-engine-
-    reproducible coarse stage (the ``ivfpq_topk`` pipeline minus the PQ
-    compression): md5-seeded decimal-exact k-means trains ``nlist``
+    reproducible coarse stage (the IVF router of ``quantized_topk`` with
+    no compression): md5-seeded decimal-exact k-means trains ``nlist``
     centroids, every corpus vector routes to its nearest list on ROUNDED
     cosine (ties to the lower centroid id), each query probes its
     ``nprobe`` nearest lists by the same rounded comparator, and only the
@@ -1606,7 +1609,7 @@ def ivf_topk_rounded(
     ).withColumn("__vn", _norm(F.col("v")))
     qv = queries.select(F.col(id_col).alias("query_id"),
                         _as_double(vec_col).alias("__qv"))
-    probes = _probe_lists(qv, cents, nprobe, sim_decimals)
+    probes = _probe_lists_lit(qv, _cent_rows(cents), nprobe, sim_decimals)
     scored = (
         assigned.join(F.broadcast(probes), "cluster")
         .join(F.broadcast(qv.withColumn("__qn", _norm(F.col("__qv")))),
@@ -1616,138 +1619,252 @@ def ivf_topk_rounded(
                                    / (F.col("__qn") * F.col("__vn")),
                                    score_decimals))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    return _rank_topk(scored, k, "sim")
 
 
-def ivfpq_topk(
+# ---------------------------------------------------------------------------
+# the quantized families as one (router × codec) pipeline — the FAISS
+# ``index_factory`` composition ("PQ16", "SQ8", "IVF8,PQ16", "IVF8,SQ8"):
+#
+#   kind    router  codec  in-plan                    stored
+#   pq      flat    PQ     quantized_topk(.., "pq")   write_quantized_index
+#   sq8     flat    SQ8    quantized_topk(.., "sq8")  + quantized_topk_indexed
+#   ivfpq   IVF     PQ     quantized_topk(.., "ivfpq")  (layout read from
+#   ivfsq8  IVF     SQ8    quantized_topk(.., "ivfsq8")  the sidecar)
+#
+# The flat router scores every code against a broadcast query batch
+# (compression without pruning — ``max_query_rows`` guards the
+# |corpus|·|queries| scan); the IVF router joins the codes to the
+# probed lists on ``cluster``. Both hand the joined frame to the
+# codec's score and the shared ``_rank_topk`` tail.
+
+
+class _Codec(NamedTuple):
+    """One compression scheme: how its model is trained, stored in the
+    index sidecar, and used on each side of the scoring join. Train and
+    encode resolve the public ``*_train``/``*_encode`` names at call
+    time, so wrapping those module attributes wraps every family."""
+
+    defaults: dict      # training params -> default
+    model_key: str      # sidecar key (and drift_stat kwarg) of the model
+    train: Callable     # (df, id_col, vec_col, **params) -> model
+    encode: Callable    # (df, model, id_col, vec_col) -> (id_col, codes)
+    to_meta: Callable   # model -> sidecar entries
+    from_meta: Callable  # sidecar -> model
+    dim: Callable       # model -> vector dim it encodes
+    corpus: Callable    # (codes, model, id_col, keep) -> corpus join side
+    query: Callable     # (qv, model) -> broadcast query side
+    score: Callable     # (joined, model, id_col, decimals) -> scored pairs
+    # in-plan FLAT codes persist when the scorer re-reads them: the ADC
+    # numerator and reconstruction norm both reference ``codes``, and
+    # re-inlining the interpreted encode folds per reference dominates;
+    # SQ8 reconstructs once in its own projection
+    persist_flat: bool
+
+
+_PQ = _Codec(
+    defaults={"m": 8, "k": 16, "iters": 1},
+    model_key="books",
+    train=lambda df, id_col, vec_col, m, k, iters: pq_train(
+        df, m=m, k=k, iters=iters, id_col=id_col, vec_col=vec_col),
+    encode=lambda df, books, id_col, vec_col: pq_encode(
+        df, books, id_col=id_col, vec_col=vec_col),
+    to_meta=lambda books: {"sub_len": len(books[0][0]), "books": books},
+    from_meta=lambda meta: meta["books"],
+    dim=lambda books: len(books) * len(books[0][0]),
+    corpus=lambda codes, books, id_col, keep: codes,
+    query=_pq_query_frame,
+    score=_adc_score,
+    persist_flat=True,
+)
+
+_SQ8 = _Codec(
+    defaults={},
+    model_key="params",
+    train=lambda df, id_col, vec_col: sq8_train(df, vec_col=vec_col),
+    encode=lambda df, params, id_col, vec_col: sq8_encode(
+        df, params, id_col=id_col, vec_col=vec_col),
+    to_meta=lambda params: {"params": [[mn, mx] for mn, mx in params]},
+    from_meta=lambda meta: [(p[0], p[1]) for p in meta["params"]],
+    dim=len,
+    corpus=_sq8_rec_frame,
+    query=lambda qv, params: qv.withColumn("__qn", _norm(F.col("__qv"))),
+    score=_sq8_score,
+    persist_flat=False,
+)
+
+# kind -> (router, codec)
+_LAYOUTS = {"pq": ("flat", _PQ), "sq8": ("flat", _SQ8),
+            "ivfpq": ("ivf", _PQ), "ivfsq8": ("ivf", _SQ8)}
+_IVF_DEFAULTS = {"nlist": 8, "coarse_iters": 1, "sim_decimals": 6}
+
+
+def _layout(kind: str, params: dict) -> tuple[bool, _Codec, dict]:
+    """(IVF-routed?, codec, params completed with their defaults) for a
+    quantized ``kind``; unknown params raise like an unknown keyword."""
+    if kind not in _LAYOUTS:
+        raise ValueError(f"unknown quantized kind {kind!r}; one of "
+                         f"{tuple(_LAYOUTS)}")
+    router, codec = _LAYOUTS[kind]
+    full = {**(_IVF_DEFAULTS if router == "ivf" else {}), **codec.defaults}
+    unknown = set(params) - set(full)
+    if unknown:
+        raise TypeError(f"{kind} takes no params {sorted(unknown)}")
+    full.update(params)
+    return router == "ivf", codec, full
+
+
+def _build(df: DataFrame, ivf: bool, codec: _Codec, p: dict, id_col: str,
+           vec_col: str, model=None) -> tuple:
+    """Train (the codec only when ``model`` is None) and encode ``df``
+    for one layout. Returns (IVF centroid frame or None, model, codes);
+    IVF codes carry their ``cluster``."""
+    cents = assigned = None
+    if ivf:
+        cents = kmeans_fit(df, k=p["nlist"], iters=p["coarse_iters"],
+                           id_col=id_col, vec_col=vec_col,
+                           sim_decimals=p["sim_decimals"])
+        assigned = kmeans_assign(df, cents, id_col=id_col, vec_col=vec_col,
+                                 sim_decimals=p["sim_decimals"])
+    if model is None:
+        model = codec.train(df, id_col, vec_col,
+                            **{n: p[n] for n in codec.defaults})
+    codes = codec.encode(df, model, id_col, vec_col)
+    if ivf:
+        codes = codes.join(assigned.select(F.col(id_col), "cluster"), id_col)
+    return cents, model, codes
+
+
+def _search(codec: _Codec, model, codes: DataFrame, queries: DataFrame,
+            topk: int, id_col: str, vec_col: str, score_decimals: int,
+            max_query_rows: int | None, cent_rows: list | None = None,
+            nprobe: int = 2, sim_decimals: int = 6,
+            static_prune: bool = False) -> DataFrame:
+    """Top-k of ``queries`` against encoded ``codes`` — flat when
+    ``cent_rows`` is None, else IVF-routed (``codes`` carry ``cluster``).
+
+    ``static_prune`` (the storage-backed IVF search): collect the
+    DISTINCT probed cluster ids first (≤ nlist values — bounded by the
+    index geometry, not the query count) and filter the code scan with
+    the literal set, so the cluster-partitioned layout prunes at
+    PLANNING time — guaranteed directory skipping instead of relying on
+    runtime dynamic partition pruning to fire. Costs one extra tiny job
+    over the query side; in-plan codes are not a partitioned source, so
+    there is nothing to prune."""
+    qv = queries.select(F.col(id_col).alias("query_id"),
+                        _as_double(vec_col).alias("__qv"))
+    ivf = cent_rows is not None
+    corpus = codec.corpus(codes, model, id_col, ("cluster",) if ivf else ())
+    q = F.broadcast(codec.query(qv, model))
+    if not ivf:
+        if max_query_rows is not None:
+            nq = queries.limit(max_query_rows + 1).count()
+            if nq > max_query_rows:
+                raise ValueError(
+                    f"flat quantized search: query side exceeds "
+                    f"{max_query_rows} rows — the flat scan is "
+                    "|corpus|x|queries|; route it through an IVF layout "
+                    "(coarse probes prune the scan), or pass "
+                    "max_query_rows=None to force")
+        joined = corpus.crossJoin(q)
+    else:
+        probes = _probe_lists_lit(qv, cent_rows, nprobe, sim_decimals)
+        if static_prune:
+            hit = [r["cluster"] for r in
+                   probes.select("cluster").distinct().collect()]
+            corpus = corpus.where(F.col("cluster").isin(hit))
+        joined = (corpus.join(F.broadcast(probes), "cluster")
+                  .join(q, "query_id"))
+    return _rank_topk(codec.score(joined, model, id_col, score_decimals),
+                      topk, "score")
+
+
+def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    nlist: int = 8,
-    nprobe: int = 2,
-    m: int = 16,
-    k: int = 16,
-    coarse_iters: int = 1,
-    pq_iters: int = 1,
+    kind: str,
     topk: int = 5,
+    model=None,
+    nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     score_decimals: int = 4,
-    sim_decimals: int = 6,
+    max_query_rows: int | None = 10_000,
+    **params,
 ) -> DataFrame:
-    """IVF-PQ composed index (Jégou 2011 §IVFADC, simplified: codebooks
-    trained on raw vectors, not residuals — documented deviation):
-    a deterministic coarse k-means routes every vector to one of
-    ``nlist`` inverted lists; each query probes its ``nprobe`` nearest
-    lists (rounded cosine, ties to the lower centroid id) and scores
-    ONLY those lists' vectors through their ``m`` PQ codes by ADC.
+    """Approximate cosine top-k through a quantized layout built in the
+    plan: ``kind`` picks the (router, codec) cell — ``pq``/``sq8`` flat,
+    ``ivfpq``/``ivfsq8`` IVF-routed. ``params`` are the layout's
+    training knobs: PQ ``m``/``k``/``iters`` (subspaces, codewords per
+    subspace, Lloyd rounds — see ``pq_train``), IVF ``nlist``/
+    ``coarse_iters``/``sim_decimals`` (see ``kmeans_fit``). A trained
+    codec ``model`` (PQ codebooks / SQ8 params) skips codec training.
 
-    The 100 TB shape this buys: the scan prunes to ~nprobe/nlist of the
-    corpus (list id is the partition key), and what it reads per vector
-    is ``m`` small codes, not the float payload — coarse pruning ×
-    compression, the standard big-ANN layout. Doubly approximate
-    (list recall × code quantization), but every step is deterministic
-    (md5 seeds, fixed-decimal rounding, first-occurrence ties), so a
-    SQL oracle replays the identical computation and value-parity is
-    exact. Returns (query_id, neighbor_id, score)."""
+    - PQ (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
+      Search"): the corpus is scored through ``m`` codes alone by ADC.
+      Recall rides the bit budget m·log2(k) (pinned by test; the
+      synthetic gate corpus is near-random, PQ's worst case).
+    - SQ8: per-dimension 8-bit codes reconstructed on the fly BELOW the
+      query join, so reconstruction and its norm cost |corpus| folds.
+    - IVF routing (Jégou 2011 §IVFADC, simplified: codebooks trained on
+      raw vectors, not residuals): a deterministic coarse k-means routes
+      every vector to one of ``nlist`` lists; each query probes its
+      ``nprobe`` nearest (rounded cosine, ties to the lower centroid id)
+      and scores ONLY those lists — coarse pruning × compression.
+
+    COMPRESSION, NOT PRUNING, for the flat kinds: every code is scored
+    against every query, so the ``max_query_rows`` guard (one cheap
+    ``limit().count()`` probe) fails loud instead of silently running a
+    quadratic scan — pass None to override deliberately; a large query
+    batch belongs on an IVF kind. Every step is deterministic (md5
+    seeds, fixed-decimal rounding, first-occurrence ties), so the SQL
+    oracles replay the identical computation and value-parity is exact.
+    Returns ``(query_id, neighbor_id, score)``, self-matches excluded,
+    ties to the lower neighbor id. Persisted codes are tracked on the
+    result — the caller releases them via ``functions.cache.release``."""
     from pyspark import StorageLevel
 
     from metrique_spark.functions.cache import track
 
-    cents = kmeans_fit(corpus, k=nlist, iters=coarse_iters,
-                       id_col=id_col, vec_col=vec_col,
-                       sim_decimals=sim_decimals)
-    assigned = kmeans_assign(corpus, cents, id_col=id_col,
-                             vec_col=vec_col, sim_decimals=sim_decimals)
-    books = pq_train(corpus, m=m, k=k, iters=pq_iters,
-                     id_col=id_col, vec_col=vec_col)
-    codes = narrow_small(
-        pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
-        .join(assigned.select(F.col(id_col), "cluster"), id_col)).persist(
-        StorageLevel.MEMORY_AND_DISK)
-
-    cent_rows = getattr(cents, _KMEANS_CENTS_ATTR, None)
-    if cent_rows is None:
-        cent_rows = sorted((r["centroid_id"], list(r["cvec"]))
-                           for r in cents.collect())
-    out = ivfpq_topk_codes(codes, cent_rows, books, queries,
-                           nprobe=nprobe, topk=topk, id_col=id_col,
-                           vec_col=vec_col, score_decimals=score_decimals,
-                           sim_decimals=sim_decimals)
-    return track(out, codes)
+    ivf, codec, p = _layout(kind, params)
+    cents, model, codes = _build(corpus, ivf, codec, p, id_col, vec_col,
+                                 model)
+    persist = ivf or codec.persist_flat
+    if persist:
+        # encode once, probe many: repeat actions over the result pay
+        # the encode (and routing) once
+        codes = narrow_small(codes).persist(StorageLevel.MEMORY_AND_DISK)
+    out = _search(codec, model, codes, queries, topk, id_col, vec_col,
+                  score_decimals, max_query_rows,
+                  cent_rows=_cent_rows(cents) if ivf else None,
+                  nprobe=nprobe, sim_decimals=p.get("sim_decimals", 6))
+    return track(out, codes) if persist else out
 
 
-def ivfpq_topk_codes(
-    codes: DataFrame,
-    cent_rows: list,
-    books: list,
-    queries: DataFrame,
-    nprobe: int = 2,
-    topk: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    sim_decimals: int = 6,
-    static_prune: bool = False,
-) -> DataFrame:
-    """IVF-PQ search against an already-routed, already-encoded corpus
-    (``codes``: id, codes, cluster) — the scoring half of ``ivfpq_topk``,
-    shared with the storage-backed path (``read_ivfpq_index`` → search,
-    where the cluster equi-join on the cluster-partitioned layout prunes
-    at the directory level). ``cent_rows``: driver-side
-    ``[(cid, vec), ...]`` sorted by cid.
-
-    ``static_prune`` (the storage-backed default): collect the DISTINCT
-    probed cluster ids first (≤ nlist values — bounded by the index
-    geometry, not the query count) and filter the code scan with the
-    literal set, so the cluster-partitioned layout prunes at PLANNING
-    time — guaranteed directory skipping instead of relying on runtime
-    dynamic partition pruning to fire. Costs one extra tiny job over the
-    query side; the in-plan caller skips it (its codes aren't a
-    partitioned source, there is nothing to prune)."""
-    q = _pq_query_frame(queries, books, id_col, vec_col)
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        _as_double(vec_col).alias("__qv"))
-    probes = _probe_lists_lit(qv, cent_rows, nprobe, sim_decimals)
-    if static_prune:
-        hit = [r["cluster"] for r in
-               probes.select("cluster").distinct().collect()]
-        codes = codes.where(F.col("cluster").isin(hit))
-
-    num, rn2 = _adc_exprs(books)
-    joined = (codes.join(F.broadcast(probes), "cluster")
-              .join(F.broadcast(q), "query_id")
-              .where(F.col(id_col) != F.col("query_id")))
-    scored = joined.select(
-        "query_id", F.col(id_col).alias("neighbor_id"),
-        F.round(num / (F.col("__qn") * F.sqrt(rn2)),
-                score_decimals).alias("score"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= topk).drop("__rk"))
+def ivfpq_topk(corpus: DataFrame, queries: DataFrame,
+               **kw) -> DataFrame:
+    """``quantized_topk(corpus, queries, "ivfpq", **kw)`` — kept under
+    this name because the benchmark's traced-layer map pins it."""
+    return quantized_topk(corpus, queries, "ivfpq", **kw)
 
 
-# --- persisted PQ / IVF-PQ indexes: train + encode ONCE, search many.
+# --- stored quantized indexes: train + encode ONCE, search many.
 # At scale, encoding is the dominant cost (m argmin folds per vector over
 # the whole corpus) — recomputing it per query batch is what makes the
-# in-plan pq_topk/ivfpq_topk a demo path. The stored layout keeps the
-# codebooks (m·k·sub_len doubles — driver-resident by the PQ contract)
-# in a JSON sidecar and the corpus codes in parquet; IVF-PQ additionally
-# partitions the codes by coarse cluster so a probe's equi-join prunes
-# at the directory level. Commit protocol: on REBUILD the old sidecar is
-# deleted FIRST (readers fail loud on the missing marker instead of
-# scoring new codes with stale codebooks), the codes are written, and
-# the new sidecar is written LAST — its presence is the commit point,
-# so a crashed write is re-run, never half-read. Appends land in
-# content-token-keyed ``__abatch`` partitions (dynamic overwrite), so a
-# retried or duplicated append of the same batch converges to one copy
-# instead of doubling rows that would then occupy two top-k slots.
+# in-plan ``quantized_topk`` a demo path. The stored layout keeps the
+# codec model (PQ codebooks / SQ8 params — driver-resident by contract)
+# and, for IVF kinds, the coarse centroids in a JSON sidecar and the
+# corpus codes in parquet: flat kinds partitioned by
+# (``__gbucket``, ``__abatch``), IVF kinds by (``cluster``, ``__abatch``)
+# so a probe's equi-join prunes at the directory level. Commit protocol:
+# on REBUILD the old sidecar is deleted FIRST (readers fail loud on the
+# missing marker instead of scoring new codes with a stale model), the
+# codes are written, and the new sidecar is written LAST — its presence
+# is the commit point, so a crashed write is re-run, never half-read.
+# Appends land in content-token-keyed ``__abatch`` partitions (dynamic
+# overwrite), so a retried or duplicated append of the same batch
+# converges to one copy instead of doubling rows that would then occupy
+# two top-k slots.
 
 _PQ_SIDECAR = "_pq.json"
 _PQ_FORMAT = 1
@@ -1799,76 +1916,128 @@ def _abatch_token(df: DataFrame, id_col: str) -> str:
     return f"b{r['n']}x{r['s']}"
 
 
-def write_pq_index(
+_STORED = ("pq", "sq8", "ivfpq")
+
+
+def write_quantized_index(
     df: DataFrame,
     path: str,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 1,
+    kind: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     fs=None,
     content_hash: bool = True,
     gbuckets: int = 16,
-) -> list:
-    """Train PQ codebooks on ``df`` and persist the index: codes to
-    ``path/codes`` (parquet), codebooks + params to the ``_pq.json``
-    sidecar. Returns the trained codebooks. Flat-PQ search reads every
-    code (compression, not pruning) — for a pruned stored layout use
-    ``write_ivfpq_index``.
+    **params,
+):
+    """Train the ``kind`` layout (``pq``, ``sq8`` or ``ivfpq``; training
+    ``params`` as in ``quantized_topk``) on ``df`` and persist the
+    index: codes to ``path/codes`` (parquet), model + params to the
+    ``_pq.json`` sidecar. Returns the trained codec model. Flat search
+    reads every code (compression, not pruning); ``ivfpq`` partitions
+    the codes by coarse cluster so a probe reads ~nprobe/nlist of them.
 
     ``content_hash`` (default on) stores a per-row vector fingerprint
     (``__vh``, see ``_vh``) alongside the codes, enabling
     retention-free incremental refresh; search paths ignore the
     column. Off reproduces the pre-fingerprint layout (refresh then
-    needs a retained generation to diff against). ``gbuckets``
-    sub-partitions each batch directory by id hash (see ``_gbucket``)
-    so removals rewrite only hit buckets — ~1/gbuckets of the codes
-    per removed-id bucket instead of the whole base partition."""
+    needs a retained generation to diff against). ``gbuckets`` (flat
+    kinds) sub-partitions each batch directory by id hash (see
+    ``_gbucket``) so removals rewrite only hit buckets — ~1/gbuckets of
+    the codes per removed-id bucket instead of the whole base
+    partition."""
     import json
 
+    if kind not in _STORED:
+        raise ValueError(f"no stored layout for kind {kind!r}; one of "
+                         f"{_STORED}")
+    ivf, codec, p = _layout(kind, params)
     fs = _default_fs(fs)
     _invalidate_index(fs, path)
-    books = pq_train(df, m=m, k=k, iters=iters, id_col=id_col,
-                     vec_col=vec_col)
-    codes = pq_encode(df, books, id_col=id_col, vec_col=vec_col)
+    cents, model, codes = _build(df, ivf, codec, p, id_col, vec_col)
     if content_hash:
         codes = codes.join(
             df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
-    (codes.withColumn("__gbucket", _gbucket(id_col, gbuckets))
-     .withColumn("__abatch", F.lit("base"))
-     .write.partitionBy("__gbucket", "__abatch").mode("overwrite")
+    meta = {"format": _PQ_FORMAT, "kind": kind, "id_col": id_col,
+            "vh": bool(content_hash), **p, **codec.to_meta(model)}
+    if ivf:
+        meta["centroids"] = [[cid, vec] for cid, vec in _cent_rows(cents)]
+    else:
+        meta["gbuckets"] = gbuckets
+        codes = codes.withColumn("__gbucket", _gbucket(id_col, gbuckets))
+    (codes.withColumn("__abatch", F.lit("base"))
+     .write.partitionBy(*_pq_part_cols(meta)).mode("overwrite")
      .parquet(path + "/codes"))
-    meta = {"format": _PQ_FORMAT, "kind": "pq", "m": m, "k": k,
-            "iters": iters, "id_col": id_col,
-            "sub_len": len(books[0][0]), "books": books,
-            "vh": bool(content_hash), "gbuckets": gbuckets}
     fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
-    return books
+    return model
 
 
-def read_pq_index(spark, path: str, fs=None) -> tuple[DataFrame, dict]:
-    """(codes, meta) back from ``write_pq_index``/``write_ivfpq_index``
-    output; ``meta`` carries the codebooks (JSON floats round-trip
-    doubles exactly) and, for IVF-PQ, the coarse centroids. Fails loud
-    on a missing or mismatched sidecar — codes without their codebooks
-    are meaningless, and silently retraining would score against the
-    wrong codewords."""
+def _sidecar_layout(meta: dict) -> tuple[bool, _Codec]:
+    """(IVF-routed?, codec) of a stored index; a kind-less sidecar is a
+    legacy flat PQ index."""
+    router, codec = _LAYOUTS[meta.get("kind") or "pq"]
+    return router == "ivf", codec
+
+
+def _sidecar_cents(meta: dict) -> list:
+    return [(c[0], list(c[1])) for c in meta["centroids"]]
+
+
+def _read_sidecar(fs, path: str) -> dict:
+    """The committed sidecar of a stored quantized index. Fails loud on
+    a missing or mismatched sidecar — codes without their model are
+    meaningless, and silently retraining would score against the wrong
+    codewords."""
     import json
 
-    fs = _default_fs(fs)
     side = fs.join(path, _PQ_SIDECAR)
     if not fs.isfile(side):
         raise ValueError(
             f"no PQ index at {path!r} ({_PQ_SIDECAR} missing — "
             "uncommitted or not a PQ index)")
     meta = json.loads(fs.read_text(side))
-    needs = "params" if meta.get("kind") == "sq8" else "books"
-    if meta.get("format") != _PQ_FORMAT or needs not in meta:
+    layout = _LAYOUTS.get(meta.get("kind") or "pq")
+    if (meta.get("format") != _PQ_FORMAT or layout is None
+            or layout[1].model_key not in meta):
         raise ValueError(
             f"PQ index sidecar at {path!r} has format "
             f"{meta.get('format')!r}, reader supports {_PQ_FORMAT}")
+    return meta
+
+
+def read_pq_index(spark, path: str, fs=None) -> tuple[DataFrame, dict]:
+    """(codes, meta) back from ``write_quantized_index`` output; ``meta``
+    carries the codec model (JSON floats round-trip doubles exactly)
+    and, for IVF kinds, the coarse centroids."""
+    meta = _read_sidecar(_default_fs(fs), path)
     return spark.read.parquet(path + "/codes"), meta
+
+
+def quantized_topk_indexed(
+    spark,
+    path: str,
+    queries: DataFrame,
+    topk: int = 5,
+    nprobe: int = 2,
+    vec_col: str = "embedding",
+    score_decimals: int = 4,
+    max_query_rows: int | None = 10_000,
+    fs=None,
+) -> DataFrame:
+    """Top-k against a stored quantized index of any kind (read from its
+    sidecar): flat kinds score every stored code (``max_query_rows``
+    guards the scan, as in ``quantized_topk``); IVF kinds select
+    ``nprobe`` clusters per query and the cluster-partitioned code scan
+    prunes to those directories at planning time. The probe pays only
+    the code scan — training and encoding were paid once at write
+    time."""
+    codes, meta = read_pq_index(spark, path, fs=fs)
+    ivf, codec = _sidecar_layout(meta)
+    return _search(codec, codec.from_meta(meta), codes, queries, topk,
+                   meta["id_col"], vec_col, score_decimals, max_query_rows,
+                   cent_rows=_sidecar_cents(meta) if ivf else None,
+                   nprobe=nprobe, sim_decimals=meta.get("sim_decimals", 6),
+                   static_prune=True)
 
 
 def append_to_pq_index(
@@ -1877,41 +2046,28 @@ def append_to_pq_index(
     vec_col: str = "embedding",
     fs=None,
 ) -> None:
-    """Extend a stored PQ / IVF-PQ / SQ8 index with a new batch: encode
-    against the STORED parameters (frozen — code semantics never shift
-    under readers) and land the slim (id, codes[, cluster]) rows in a
-    content-token-keyed ``__abatch`` partition. Idempotent: a retried
-    or duplicated append of the same batch dynamically OVERWRITES its
-    own token directory instead of doubling rows (duplicate ids would
-    otherwise occupy two top-k slots). Cost is O(batch) argmin folds —
-    the existing corpus is never re-read or re-encoded. Parameters
-    drifting from the data distribution degrade recall, not
-    correctness; re-run the writer when they do."""
-    import json
-
+    """Extend a stored quantized index with a new batch: encode against
+    the STORED model (frozen — code semantics never shift under
+    readers), route against the stored centroids for IVF kinds, and land
+    the slim (id, codes) rows in a content-token-keyed ``__abatch``
+    partition. Idempotent: a retried or duplicated append of the same
+    batch dynamically OVERWRITES its own token directory instead of
+    doubling rows (duplicate ids would otherwise occupy two top-k
+    slots). Cost is O(batch) encode folds — the existing corpus is never
+    re-read or re-encoded. A model drifting from the data distribution
+    degrades recall, not correctness; re-run the writer when it does."""
     fs = _default_fs(fs)
-    side = fs.join(path, _PQ_SIDECAR)
-    if not fs.isfile(side):
-        raise ValueError(
-            f"no committed index at {path!r} ({_PQ_SIDECAR} missing)")
-    meta = json.loads(fs.read_text(side))
+    meta = _read_sidecar(fs, path)
     id_col = meta["id_col"]
-    kind = meta.get("kind")
-    if kind == "sq8":
-        params = [(p[0], p[1]) for p in meta["params"]]
-        dim = len(params)
-    else:
-        books = meta["books"]
-        dim = len(books) * meta["sub_len"]
+    ivf, codec = _sidecar_layout(meta)
+    model = codec.from_meta(meta)
+    dim = codec.dim(model)
     first = batch.select(_as_double(vec_col).alias("v")).first()
     if first is not None and len(first["v"]) != dim:
         raise ValueError(
             f"append_to_pq_index: batch vectors have dim "
             f"{len(first['v'])}, index was trained at dim {dim}")
-    if kind == "sq8":
-        codes = sq8_encode(batch, params, id_col=id_col, vec_col=vec_col)
-    else:
-        codes = pq_encode(batch, books, id_col=id_col, vec_col=vec_col)
+    codes = codec.encode(batch, model, id_col, vec_col)
     if meta.get("vh"):
         # fingerprint only when the stored layout already carries it —
         # mixing footer schemas inside one parquet dir would make the
@@ -1919,30 +2075,25 @@ def append_to_pq_index(
         codes = codes.join(
             batch.select(F.col(id_col), _vh(vec_col).alias("__vh")),
             id_col)
-    token = _abatch_token(batch, id_col)
-    out = codes.withColumn("__abatch", F.lit(token))
-    part_cols = ["__abatch"]
-    if kind == "ivfpq":
-        cent_rows = [(c[0], c[1]) for c in meta["centroids"]]
+    out = codes.withColumn("__abatch", F.lit(_abatch_token(batch, id_col)))
+    if ivf:
         vecs = batch.select(F.col(id_col).alias("__vid"),
                             _as_double(vec_col).alias("v"))
-        assigned = _assign_lit(vecs, sorted(cent_rows),
+        assigned = _assign_lit(vecs, sorted(_sidecar_cents(meta)),
                                meta["sim_decimals"]).select(
             F.col("__vid").alias(id_col), "cluster")
         out = out.join(assigned, id_col)
-        part_cols = ["cluster", "__abatch"]
     elif meta.get("gbuckets"):
         # match the stored flat layout's removal-granularity bucketing
         out = out.withColumn("__gbucket",
                              _gbucket(id_col, meta["gbuckets"]))
-        part_cols = ["__gbucket", "__abatch"]
-    (out.write.partitionBy(*part_cols).mode("overwrite")
+    (out.write.partitionBy(*_pq_part_cols(meta)).mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .parquet(path + "/codes"))
 
 
 def _pq_part_cols(meta: dict) -> list[str]:
-    if meta.get("kind") == "ivfpq":
+    if _sidecar_layout(meta)[0]:
         return ["cluster", "__abatch"]
     if meta.get("gbuckets"):
         return ["__gbucket", "__abatch"]
@@ -1990,11 +2141,9 @@ def resume_pq_compaction(spark, path: str, pending: dict,
     deterministically rebuilds the same consolidated directory, after
     which the originals are deleted. A group whose originals are all
     gone already completed. Returns directories removed."""
-    import json as _json
-
     fs = _default_fs(fs)
     croot = fs.join(path, "codes")
-    meta = _json.loads(fs.read_text(fs.join(path, _PQ_SIDECAR)))
+    meta = _read_sidecar(fs, path)
     id_col = meta["id_col"]
     part_cols = _pq_part_cols(meta)
     _, tok_dirs = _pq_token_dirs(fs, croot, part_cols)
@@ -2363,408 +2512,161 @@ def drift_stat(
     raise ValueError(f"drift_stat: unknown kind {kind!r}")
 
 
-def pq_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    fs=None,
-) -> DataFrame:
-    """Top-k against a stored flat-PQ index: read codes + codebooks,
-    ADC-score. The probe pays only the code scan — no training, no
-    encoding."""
+
+
+# ---------------------------------------------------------------------------
+# the stored index kinds as the Engine drives them: one table entry per
+# kind, so ``Engine.build_vector_index`` / ``vector_search`` /
+# ``refresh_vector_index`` / ``compact_vector_index`` dispatch instead of
+# branching. Raw-vector IVF keeps its own bucket-file storage protocol;
+# the quantized kinds share the sidecar + ``__abatch`` layout above.
+
+
+def _ivf_batch_count(fs, path: str) -> int:
+    """Max per-bucket data-file count of a stored IVF index (appends add
+    files to their bucket; 1 when fully compacted)."""
+    root = fs.join(path, "vectors")
+    if not fs.isdir(root):
+        return 0
+    worst = 0
+    for d in fs.listdir(root):
+        p = fs.join(root, d)
+        if d.startswith("bucket=") and fs.isdir(p):
+            worst = max(worst, sum(f.endswith(".parquet")
+                                   for f in fs.listdir(p)))
+    return worst
+
+
+def _pq_batch_count(fs, path: str) -> int:
+    """Distinct ``__abatch`` tokens of a stored quantized index (1 when
+    fully compacted). Listing cost is bounded by buckets × batches."""
+    root = fs.join(path, "codes")
+    if not fs.isdir(root):
+        return 0
+    tokens: set[str] = set()
+    for d in fs.listdir(root):
+        p = fs.join(root, d)
+        if d.startswith("__abatch="):
+            tokens.add(d)
+        elif d.startswith(("cluster=", "__gbucket=")) and fs.isdir(p):
+            tokens.update(b for b in fs.listdir(p)
+                          if b.startswith("__abatch="))
+    return len(tokens)
+
+
+def _ivf_diff_source(spark, path: str, id_col: str, vec_col: str, fs):
+    """IVF stores the raw vectors: diff them against the live rows
+    directly."""
+    idx = (spark.read.parquet(path + "/vectors")
+           .select(F.col(id_col).alias("__iid"), F.col("v").alias("__iv")))
+    same = ((F.col(id_col) == F.col("__iid"))
+            & F.col(vec_col).cast("array<double>").eqNullSafe(F.col("__iv")))
+    return idx, same
+
+
+def _pq_diff_source(spark, path: str, id_col: str, vec_col: str, fs):
+    """The quantized kinds store a per-row vector fingerprint (``__vh``):
+    diff that against the live rows' fingerprints. None for a legacy
+    fingerprint-less index — codes can't be compared to vectors."""
     codes, meta = read_pq_index(spark, path, fs=fs)
-    if meta.get("kind") not in (None, "pq"):
-        raise ValueError(
-            f"index at {path!r} is kind {meta.get('kind')!r}, not a "
-            "flat PQ index — probe it with its own family's search "
-            "function (sq8_topk_indexed / ivfpq_topk_indexed)")
-    return pq_topk_codes(codes, meta["books"], queries, k=k,
-                         id_col=meta["id_col"], vec_col=vec_col,
-                         score_decimals=score_decimals)
+    if not meta.get("vh"):
+        return None
+    idx = codes.select(F.col(id_col).alias("__iid"),
+                       F.col("__vh").alias("__ivh"))
+    return idx, ((F.col(id_col) == F.col("__iid"))
+                 & (_vh(vec_col) == F.col("__ivh")))
 
 
-def write_ivfpq_index(
-    df: DataFrame,
-    path: str,
-    nlist: int = 8,
-    m: int = 16,
-    k: int = 16,
-    coarse_iters: int = 1,
-    pq_iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sim_decimals: int = 6,
-    fs=None,
-    content_hash: bool = True,
-) -> None:
-    """Persist the composed IVF-PQ layout: deterministic coarse k-means
-    routes every vector to an inverted list, codes land in parquet
-    PARTITIONED BY cluster (a probe's equi-join prunes to the probed
-    directories — the scan cost rides nprobe/nlist), coarse centroids +
-    PQ codebooks go to the sidecar."""
-    import json
-
-    fs = _default_fs(fs)
-    _invalidate_index(fs, path)
-    cents = kmeans_fit(df, k=nlist, iters=coarse_iters, id_col=id_col,
-                       vec_col=vec_col, sim_decimals=sim_decimals)
-    assigned = kmeans_assign(df, cents, id_col=id_col, vec_col=vec_col,
-                             sim_decimals=sim_decimals)
-    books = pq_train(df, m=m, k=k, iters=pq_iters, id_col=id_col,
-                     vec_col=vec_col)
-    codes = (pq_encode(df, books, id_col=id_col, vec_col=vec_col)
-             .join(assigned.select(F.col(id_col), "cluster"), id_col))
-    if content_hash:
-        codes = codes.join(
-            df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
-    (codes.withColumn("__abatch", F.lit("base"))
-     .write.partitionBy("cluster", "__abatch").mode("overwrite")
-     .parquet(path + "/codes"))
-    cent_rows = getattr(cents, _KMEANS_CENTS_ATTR, None)
-    if cent_rows is None:
-        cent_rows = sorted((r["centroid_id"], list(r["cvec"]))
-                           for r in cents.collect())
-    meta = {"format": _PQ_FORMAT, "kind": "ivfpq", "m": m, "k": k,
-            "iters": pq_iters, "nlist": nlist,
-            "coarse_iters": coarse_iters, "id_col": id_col,
-            "sim_decimals": sim_decimals,
-            "sub_len": len(books[0][0]), "books": books,
-            "centroids": [[cid, vec] for cid, vec in cent_rows],
-            "vh": bool(content_hash)}
-    fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
+def _pq_drift_args(spark, path: str, fs) -> dict:
+    meta = _read_sidecar(fs, path)
+    ivf, codec = _sidecar_layout(meta)
+    if ivf:
+        return {"centroids": _sidecar_cents(meta),
+                "decimals": meta.get("sim_decimals", 6)}
+    return {codec.model_key: codec.from_meta(meta)}
 
 
-def ivfpq_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    nprobe: int = 2,
-    topk: int = 5,
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    fs=None,
-) -> DataFrame:
-    """Top-k against a stored IVF-PQ index: probes select clusters, the
-    cluster-partitioned code scan prunes to those directories, ADC
-    scores the codes. Probe-many cost: nprobe/nlist of the code scan —
-    training and encoding were paid once at write time."""
-    codes, meta = read_pq_index(spark, path, fs=fs)
-    if meta.get("kind") != "ivfpq":
-        probe = {"pq": "pq_topk_indexed", None: "pq_topk_indexed",
-                 "sq8": "sq8_topk_indexed"}.get(meta.get("kind"),
-                                                "its own family's probe")
-        raise ValueError(
-            f"index at {path!r} is kind {meta.get('kind') or 'pq'!r}, "
-            f"not ivfpq — probe it with {probe}, or rebuild with "
-            "write_ivfpq_index")
-    cent_rows = [(c[0], list(c[1])) for c in meta["centroids"]]
-    return ivfpq_topk_codes(codes, cent_rows, meta["books"], queries,
-                            nprobe=nprobe, topk=topk,
-                            id_col=meta["id_col"], vec_col=vec_col,
-                            score_decimals=score_decimals,
-                            sim_decimals=meta["sim_decimals"],
-                            static_prune=True)
+class AnnFamily(NamedTuple):
+    """How the Engine drives one stored index kind. Every callable
+    resolves this module's functions at call time, so replacing one of
+    them (crash injection in tests) replaces it for the Engine too."""
+
+    params: frozenset   # build params the writer takes
+    # (df, path, id_col, vec_col, fs, **params)
+    write: Callable
+    # (spark, path, queries, k, nprobe (None: the kind's default),
+    #  id_col, vec_col, fs) -> (query_id, neighbor_id, sim|score)
+    search: Callable
+    # (spark, path, id_col, vec_col, fs) -> (index frame with __iid,
+    #  same-row condition), or None: diff against the built generation
+    diff_source: Callable
+    remove: Callable    # (spark, path, ids, id_col, fs)
+    append: Callable    # (batch, path, id_col, vec_col, fs)
+    drift_args: Callable  # (spark, path, fs) -> drift_stat kwargs
+    # the build-time drift baseline when it is known without a job
+    build_drift: tuple | None
+    batch_count: Callable  # (fs, path) -> append-granule count
+    compact: Callable   # (spark, path, id_col, fs, small_bytes, record)
+    resume: Callable    # (spark, path, pending, fs)
+    lists: tuple | None  # (partition key, subdir) of the inverted lists
 
 
-# --- scalar quantization (SQ8): the third standard compression scheme
-# in the big-ANN toolbox (public technique — e.g. FAISS's SQ8): each
-# dimension affinely quantized to an 8-bit code against the corpus's
-# per-dimension [min, max]. 8x smaller scan payload than float64 with
-# near-exact recall at moderate dimensionality — the cheap middle
-# ground between exact cosine (full payload) and PQ (m codes, lossier).
-# Deterministic end-to-end (exact per-dim min/max, fixed rounding,
-# identical IEEE expression order both engines), so the SQL oracle
-# value-replays train + encode + reconstruction + scoring.
+def _quantized_family(kind: str, build_drift: tuple | None = None):
+    ivf, _, p = _layout(kind, {})
+    return AnnFamily(
+        params=frozenset(p) | {"content_hash"}
+        | (set() if ivf else {"gbuckets"}),
+        write=lambda df, path, fs, **kw: write_quantized_index(
+            df, path, kind, fs=fs, **kw),
+        search=lambda spark, path, queries, k, nprobe, id_col, vec_col, fs:
+            quantized_topk_indexed(
+                spark, path, queries, topk=k,
+                nprobe=2 if nprobe is None else nprobe, vec_col=vec_col,
+                fs=fs),
+        diff_source=_pq_diff_source,
+        remove=lambda spark, path, ids, id_col, fs: remove_from_pq_index(
+            spark, path, ids, fs=fs),
+        append=lambda batch, path, id_col, vec_col, fs: append_to_pq_index(
+            batch, path, vec_col=vec_col, fs=fs),
+        drift_args=_pq_drift_args,
+        build_drift=build_drift,
+        batch_count=_pq_batch_count,
+        compact=lambda spark, path, id_col, fs, small_bytes, record:
+            compact_pq_index(spark, path, fs=fs, small_bytes=small_bytes,
+                             record=record),
+        resume=lambda spark, path, pending, fs: resume_pq_compaction(
+            spark, path, pending, fs=fs),
+        lists=("cluster", "/codes") if ivf else None,
+    )
 
 
-def sq8_train(
-    df: DataFrame,
-    vec_col: str = "embedding",
-) -> list:
-    """Per-dimension quantization params from the corpus: returns the
-    raw ``[(mn, mx), ...]`` extrema (the derived span/denominator are
-    computed from them in ONE place so the SQL oracle's arithmetic
-    chain is bit-identical). ONE map-side-combinable (dim) shuffle whose
-    result is ``dim`` rows collected to the driver — the corpus never
-    shuffles and the params are literal-sized by construction."""
-    dims = (df.select(F.posexplode(_as_double(vec_col))
-                      .alias("dim", "x"))
-            .groupBy("dim")
-            .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-            .collect())
-    out = [None] * len(dims)
-    for r in dims:
-        out[r["dim"]] = (float(r["mn"]), float(r["mx"]))
-    return out
-
-
-def _sq8_params_lit(params: list) -> Column:
-    """The per-dim (mn, span, denominator) params as ONE parsed SQL
-    literal (repr round-trips doubles exactly; a nested F.lit build
-    would be py4j-bound — the codebook-literal lesson). ``dn = mx - mn``
-    and ``sp = (mx - mn) / 255`` are evaluated HERE in Python doubles —
-    the exact IEEE chain the oracle's SQL expressions replay."""
-    return F.expr("array({})".format(",".join(
-        f"named_struct('mn',{mn!r}D,'sp',{(mx - mn) / 255.0!r}D,"
-        f"'dn',{mx - mn!r}D)"
-        for mn, mx in params)))
-
-
-def _sq8_rec_frame(codes: DataFrame, params: list, id_col: str,
-                   keep: tuple = ()) -> DataFrame:
-    """(neighbor_id, __rec, __rn2[, keep...]) — reconstruction and its
-    norm materialized ONCE per corpus row (below whatever join scores
-    them). SHARED by the flat and IVF-routed scorers: the expression
-    chain here is what the DuckDB oracles' ``rec`` CTE replays, so both
-    families stay IEEE-identical by construction."""
-    p = _sq8_params_lit(params)
-    rec = F.zip_with(F.col("codes"), p,
-                     lambda c, pp: pp["mn"]
-                     + c.cast("double") * pp["sp"])
-    out = codes.select(
-        F.col(id_col).alias("neighbor_id"), rec.alias("__rec"), *keep)
-    return out.withColumn("__rn2", _dot(F.col("__rec"), F.col("__rec")))
-
-
-def _sq8_score_topk(joined: DataFrame, topk: int,
-                    score_decimals: int) -> DataFrame:
-    """Rounded-cosine scoring + top-k over a frame carrying
-    (query_id, neighbor_id, __qv, __qn, __rec, __rn2) — the shared tail
-    of every SQ8 scorer."""
-    from pyspark.sql import Window
-
-    scored = (joined.where(F.col("neighbor_id") != F.col("query_id"))
-              .select("query_id", "neighbor_id",
-                      F.round(_dot(F.col("__qv"), F.col("__rec"))
-                              / (F.col("__qn") * F.sqrt(F.col("__rn2"))),
-                              score_decimals).alias("score")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= topk).drop("__rk"))
-
-
-def sq8_encode(
-    df: DataFrame,
-    params: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): each dimension quantized to
-    ``round((x - mn) * 255 / (mx - mn))`` (0 for constant dims) — map-
-    only, params as a literal. The expression order is pinned: the SQL
-    oracle must evaluate the identical IEEE chain for code parity."""
-    p = _sq8_params_lit(params)
-    v = _as_double(vec_col)
-    codes = F.zip_with(
-        v, p,
-        lambda x, pp: F.when(pp["dn"] == 0.0, F.lit(0))
-        .otherwise(F.round((x - pp["mn"]) * 255.0 / pp["dn"], 0)
-                   .cast("int")))
-    from metrique_spark.functions.dedup import spread_small_scan
-
-    return spread_small_scan(df.select(F.col(id_col),
-                                       codes.alias("codes")))
-
-
-def write_sq8_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fs=None,
-    content_hash: bool = True,
-    gbuckets: int = 16,
-) -> list:
-    """Persist an SQ8 index: codes to ``path/codes`` (8x smaller scan
-    payload than the float corpus), per-dim params to the ``_pq.json``
-    sidecar (kind ``sq8``; sidecar written last = commit point).
-    Returns the trained params. Encode once, probe many — the probe
-    pays only the code scan + reconstruction folds."""
-    import json
-
-    fs = _default_fs(fs)
-    _invalidate_index(fs, path)
-    params = sq8_train(df, vec_col=vec_col)
-    codes = sq8_encode(df, params, id_col=id_col, vec_col=vec_col)
-    if content_hash:
-        codes = codes.join(
-            df.select(F.col(id_col), _vh(vec_col).alias("__vh")), id_col)
-    (codes.withColumn("__gbucket", _gbucket(id_col, gbuckets))
-     .withColumn("__abatch", F.lit("base"))
-     .write.partitionBy("__gbucket", "__abatch").mode("overwrite")
-     .parquet(path + "/codes"))
-    meta = {"format": _PQ_FORMAT, "kind": "sq8", "id_col": id_col,
-            "params": [[mn, mx] for mn, mx in params],
-            "vh": bool(content_hash), "gbuckets": gbuckets}
-    fs.write_text(fs.join(path, _PQ_SIDECAR), json.dumps(meta))
-    return params
-
-
-def sq8_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    max_query_rows: int | None = 10_000,
-    fs=None,
-) -> DataFrame:
-    """Top-k against a stored SQ8 index (``read_pq_index`` reads the
-    shared sidecar layout; kind-checked)."""
-    codes, meta = read_pq_index(spark, path, fs=fs)
-    if meta.get("kind") != "sq8":
-        raise ValueError(
-            f"index at {path!r} is kind {meta.get('kind')!r}, not sq8 — "
-            "probe it with its own family's search function")
-    params = [(p[0], p[1]) for p in meta["params"]]
-    return sq8_topk_codes(codes, params, queries, k=k,
-                          id_col=meta["id_col"], vec_col=vec_col,
-                          score_decimals=score_decimals,
-                          max_query_rows=max_query_rows)
-
-
-def ivfsq8_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    nlist: int = 8,
-    nprobe: int = 2,
-    coarse_iters: int = 1,
-    topk: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    sim_decimals: int = 6,
-) -> DataFrame:
-    """Composed IVF × SQ8 index (the FAISS "IVF,SQ8" layout): the
-    deterministic coarse k-means routes vectors to ``nlist`` inverted
-    lists, each query probes its ``nprobe`` nearest lists, and only
-    those lists' vectors are scored — through their 8-bit scalar codes.
-    Coarse pruning × cheap compression: versus IVF-PQ this trades a
-    larger code payload (dim bytes vs m) for near-exact per-list recall
-    and no codebook training. Deterministic end-to-end; the SQL oracle
-    replays coarse training, routing, probe selection, quantization and
-    reconstruction exactly."""
-    from pyspark import StorageLevel
-
-    from metrique_spark.functions.cache import track
-
-    cents = kmeans_fit(corpus, k=nlist, iters=coarse_iters,
-                       id_col=id_col, vec_col=vec_col,
-                       sim_decimals=sim_decimals)
-    assigned = kmeans_assign(corpus, cents, id_col=id_col,
-                             vec_col=vec_col, sim_decimals=sim_decimals)
-    params = sq8_train(corpus, vec_col=vec_col)
-    # persist the routed codes (the ivfpq_topk contract): encode-once/
-    # probe-many — repeat probes must pay the quantization + routing
-    # once, not per action. Caller releases via functions.cache.release.
-    codes = narrow_small(
-        sq8_encode(corpus, params, id_col=id_col, vec_col=vec_col)
-        .join(assigned.select(F.col(id_col), "cluster"), id_col)).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    cent_rows = getattr(cents, _KMEANS_CENTS_ATTR, None)
-    if cent_rows is None:
-        cent_rows = sorted((r["centroid_id"], list(r["cvec"]))
-                           for r in cents.collect())
-    out = ivfsq8_topk_codes(codes, cent_rows, params, queries,
-                            nprobe=nprobe, topk=topk, id_col=id_col,
-                            vec_col=vec_col,
-                            score_decimals=score_decimals,
-                            sim_decimals=sim_decimals)
-    return track(out, codes)
-
-
-def ivfsq8_topk_codes(
-    codes: DataFrame,
-    cent_rows: list,
-    params: list,
-    queries: DataFrame,
-    nprobe: int = 2,
-    topk: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    sim_decimals: int = 6,
-    static_prune: bool = False,
-) -> DataFrame:
-    """IVF×SQ8 search over an already-routed, already-quantized corpus
-    (``codes``: id, codes, cluster) — reconstruction and its norm are
-    materialized BELOW the probe join (query-independent), queries
-    broadcast with their norms; ``static_prune`` as in
-    ``ivfpq_topk_codes``."""
-    from pyspark.sql import Window
-
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        _as_double(vec_col).alias("__qv"))
-    probes = _probe_lists_lit(qv, cent_rows, nprobe, sim_decimals)
-    if static_prune:
-        hit = [r["cluster"] for r in
-               probes.select("cluster").distinct().collect()]
-        codes = codes.where(F.col("cluster").isin(hit))
-    recs = _sq8_rec_frame(codes, params, id_col, keep=("cluster",))
-    q = qv.withColumn("__qn", _norm(F.col("__qv")))
-    joined = (recs.join(F.broadcast(probes), "cluster")
-              .join(F.broadcast(q), "query_id"))
-    return _sq8_score_topk(joined, topk, score_decimals)
-
-
-def sq8_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    params: list | None = None,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    max_query_rows: int | None = 10_000,
-) -> DataFrame:
-    """Approximate cosine top-k over 8-bit scalar-quantized vectors:
-    codes are reconstructed on the fly (``mn + code·span``) BELOW the
-    query join, so the reconstruction and its norm cost |corpus| folds,
-    not |corpus|·|queries| — per (query, vector) pair only the dot fold
-    runs. Same contract as ``cosine_topk``/``pq_topk``
-    (query_id, neighbor_id, score), self-matches excluded, ties to the
-    lower neighbor id. Like ``pq_topk`` this is compression without
-    pruning (``max_query_rows`` guards the flat scan); compose with IVF
-    routing for a pruned layout."""
-    if params is None:
-        params = sq8_train(corpus, vec_col=vec_col)
-    codes = sq8_encode(corpus, params, id_col=id_col, vec_col=vec_col)
-    return sq8_topk_codes(codes, params, queries, k=k, id_col=id_col,
-                          vec_col=vec_col, score_decimals=score_decimals,
-                          max_query_rows=max_query_rows)
-
-
-def sq8_topk_codes(
-    codes: DataFrame,
-    params: list,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 4,
-    max_query_rows: int | None = 10_000,
-) -> DataFrame:
-    """The scoring half of ``sq8_topk`` over an already-encoded corpus —
-    shared with the storage-backed ``sq8_topk_indexed``."""
-    if max_query_rows is not None:
-        nq = queries.limit(max_query_rows + 1).count()
-        if nq > max_query_rows:
-            raise ValueError(
-                f"sq8_topk: query side exceeds {max_query_rows} rows — "
-                "the flat scan is |corpus|x|queries|; route through an "
-                "IVF layout, or pass max_query_rows=None to force")
-    # __rec and its norm materialize BELOW the join (query-independent;
-    # a projection under the join is physically written into the
-    # streamed row), query norms once on the broadcast side — so the
-    # per-pair work is one dot fold
-    recs = _sq8_rec_frame(codes, params, id_col)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(vec_col).alias("__qv"))
-    q = q.withColumn("__qn", _norm(F.col("__qv")))
-    return _sq8_score_topk(recs.crossJoin(F.broadcast(q)), k,
-                           score_decimals)
+ANN_FAMILIES = {
+    "ivf": AnnFamily(
+        params=frozenset({"nlist", "train_iters"}),
+        write=lambda df, path, fs, **kw: write_ivf_index(df, path, **kw),
+        search=lambda spark, path, queries, k, nprobe, id_col, vec_col, fs:
+            ivf_topk_indexed(
+                *read_ivf_index(spark, path), queries, k=k,
+                nprobe=4 if nprobe is None else nprobe, id_col=id_col,
+                vec_col=vec_col),
+        diff_source=_ivf_diff_source,
+        remove=lambda spark, path, ids, id_col, fs: remove_from_ivf_index(
+            spark, path, ids, id_col=id_col, fs=fs),
+        append=lambda batch, path, id_col, vec_col, fs: append_to_ivf_index(
+            batch, path, id_col=id_col, vec_col=vec_col),
+        drift_args=lambda spark, path, fs: {
+            "centroids": _cent_rows(spark.read.parquet(path + "/centroids"))},
+        build_drift=None,
+        batch_count=_ivf_batch_count,
+        compact=lambda spark, path, id_col, fs, small_bytes, record:
+            compact_ivf_index(spark, path, id_col=id_col, fs=fs,
+                              small_bytes=small_bytes, record=record),
+        resume=lambda spark, path, pending, fs: resume_ivf_compaction(
+            spark, path, pending, fs=fs),
+        lists=("bucket", "/vectors"),
+    ),
+    "pq": _quantized_family("pq"),
+    "ivfpq": _quantized_family("ivfpq"),
+    # the trained params ARE the corpus extrema: nothing clips at build
+    "sq8": _quantized_family("sq8", build_drift=("clip_frac", 0.0)),
+}

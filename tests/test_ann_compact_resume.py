@@ -18,13 +18,6 @@ from metrique_spark.fs import LocalFS
 from metrique_spark.objects import stamp
 from test_fault_injection import FaultFS, InjectedFault
 
-# Heavy suite (>1 min serial): opt-in via `pytest -m slow` so the default
-# `pytest tests/` finishes inside the driver's verify window (r14 shipped
-# tests_ok:false purely because the ~1 h full suite was truncated). The
-# per-round gate runs these explicitly; coverage is unchanged.
-pytestmark = pytest.mark.slow
-
-
 
 def _vrows(spark, rows, day):
     df = spark.createDataFrame(

@@ -12,6 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from metrique_spark.functions.cache import _CACHE_CHUNK_CONF, narrow_small
 from metrique_spark.functions.dedup import (
     _SPREAD_CHUNK_CONF, spread_small_scan)
 
@@ -80,3 +81,22 @@ def test_values_unchanged_by_spread(spark):
         else:
             spark.conf.set(_SPREAD_CHUNK_CONF, old)
     assert wide == narrow
+
+
+@pytest.mark.parametrize("bad", ["0", "-5", "abc"])
+@pytest.mark.parametrize("conf,helper", [
+    (_SPREAD_CHUNK_CONF, spread_small_scan),
+    (_CACHE_CHUNK_CONF, narrow_small)])
+def test_bad_chunk_conf_is_a_no_op(spark, conf, helper, bad):
+    # a zero, negative or non-numeric chunk must leave the frame as it
+    # is, not raise inside the persist paths that call these helpers
+    d = _docs(spark)
+    old = spark.conf.get(conf, None)
+    try:
+        spark.conf.set(conf, bad)
+        assert helper(d) is d
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
