@@ -1693,9 +1693,10 @@ _SQ8 = _Codec(
     persist_flat=False,
 )
 
-# kind -> (router, codec)
-_LAYOUTS = {"pq": ("flat", _PQ), "sq8": ("flat", _SQ8),
-            "ivfpq": ("ivf", _PQ), "ivfsq8": ("ivf", _SQ8)}
+# kind -> (router, codec, training defaults that override the codec's:
+# IVF-PQ defaults to 16 subspaces, flat PQ to 8)
+_LAYOUTS = {"pq": ("flat", _PQ, {}), "sq8": ("flat", _SQ8, {}),
+            "ivfpq": ("ivf", _PQ, {"m": 16}), "ivfsq8": ("ivf", _SQ8, {})}
 _IVF_DEFAULTS = {"nlist": 8, "coarse_iters": 1, "sim_decimals": 6}
 
 
@@ -1705,8 +1706,9 @@ def _layout(kind: str, params: dict) -> tuple[bool, _Codec, dict]:
     if kind not in _LAYOUTS:
         raise ValueError(f"unknown quantized kind {kind!r}; one of "
                          f"{tuple(_LAYOUTS)}")
-    router, codec = _LAYOUTS[kind]
-    full = {**(_IVF_DEFAULTS if router == "ivf" else {}), **codec.defaults}
+    router, codec, own = _LAYOUTS[kind]
+    full = {**(_IVF_DEFAULTS if router == "ivf" else {}), **codec.defaults,
+            **own}
     unknown = set(params) - set(full)
     if unknown:
         raise TypeError(f"{kind} takes no params {sorted(unknown)}")
@@ -1796,9 +1798,11 @@ def quantized_topk(
     plan: ``kind`` picks the (router, codec) cell — ``pq``/``sq8`` flat,
     ``ivfpq``/``ivfsq8`` IVF-routed. ``params`` are the layout's
     training knobs: PQ ``m``/``k``/``iters`` (subspaces, codewords per
-    subspace, Lloyd rounds — see ``pq_train``), IVF ``nlist``/
-    ``coarse_iters``/``sim_decimals`` (see ``kmeans_fit``). A trained
-    codec ``model`` (PQ codebooks / SQ8 params) skips codec training.
+    subspace, Lloyd rounds — see ``pq_train``; default 8/16/1, IVF-PQ
+    16/16/1), IVF ``nlist``/``coarse_iters``/``sim_decimals`` (see
+    ``kmeans_fit``; default 8/1/6). A trained codec ``model`` (PQ
+    codebooks / SQ8 params) skips codec training and so takes no codec
+    training params.
 
     - PQ (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
       Search"): the corpus is scored through ``m`` codes alone by ADC.
@@ -1827,6 +1831,12 @@ def quantized_topk(
     from metrique_spark.functions.cache import track
 
     ivf, codec, p = _layout(kind, params)
+    trained = set(params) & set(codec.defaults)
+    if model is not None and trained:
+        # the given model fixes the codec: its training params would be
+        # silently ignored (``k`` here is codewords, not the top-k)
+        raise TypeError(f"{kind}: a trained model takes no codec training "
+                        f"params, got {sorted(trained)}")
     cents, model, codes = _build(corpus, ivf, codec, p, id_col, vec_col,
                                  model)
     persist = ivf or codec.persist_flat
@@ -1843,8 +1853,9 @@ def quantized_topk(
 
 def ivfpq_topk(corpus: DataFrame, queries: DataFrame,
                **kw) -> DataFrame:
-    """``quantized_topk(corpus, queries, "ivfpq", **kw)`` — kept under
-    this name because the benchmark's traced-layer map pins it."""
+    """``quantized_topk(corpus, queries, "ivfpq", **kw)``. Kept only
+    because the benchmark's self-test pins this name in its traced-layer
+    map; nothing else calls it — delete it with that test."""
     return quantized_topk(corpus, queries, "ivfpq", **kw)
 
 
@@ -1916,9 +1927,6 @@ def _abatch_token(df: DataFrame, id_col: str) -> str:
     return f"b{r['n']}x{r['s']}"
 
 
-_STORED = ("pq", "sq8", "ivfpq")
-
-
 def write_quantized_index(
     df: DataFrame,
     path: str,
@@ -1948,9 +1956,10 @@ def write_quantized_index(
     partition."""
     import json
 
-    if kind not in _STORED:
+    stored = sorted(_LAYOUTS.keys() & ANN_FAMILIES.keys())
+    if kind not in stored:
         raise ValueError(f"no stored layout for kind {kind!r}; one of "
-                         f"{_STORED}")
+                         f"{tuple(stored)}")
     ivf, codec, p = _layout(kind, params)
     fs = _default_fs(fs)
     _invalidate_index(fs, path)
@@ -1975,7 +1984,7 @@ def write_quantized_index(
 def _sidecar_layout(meta: dict) -> tuple[bool, _Codec]:
     """(IVF-routed?, codec) of a stored index; a kind-less sidecar is a
     legacy flat PQ index."""
-    router, codec = _LAYOUTS[meta.get("kind") or "pq"]
+    router, codec, _ = _LAYOUTS[meta.get("kind") or "pq"]
     return router == "ivf", codec
 
 
@@ -2611,11 +2620,17 @@ class AnnFamily(NamedTuple):
     lists: tuple | None  # (partition key, subdir) of the inverted lists
 
 
-def _quantized_family(kind: str, build_drift: tuple | None = None):
+def _quantized_family(kind: str, params: frozenset | None = None,
+                      build_drift: tuple | None = None):
+    """The Engine entry of a stored quantized ``kind``. ``params``
+    (default: everything its writer takes) are the build params the
+    Engine accepts for it."""
     ivf, _, p = _layout(kind, {})
+    if params is None:
+        params = (frozenset(p) | {"content_hash"}
+                  | (set() if ivf else {"gbuckets"}))
     return AnnFamily(
-        params=frozenset(p) | {"content_hash"}
-        | (set() if ivf else {"gbuckets"}),
+        params=params,
         write=lambda df, path, fs, **kw: write_quantized_index(
             df, path, kind, fs=fs, **kw),
         search=lambda spark, path, queries, k, nprobe, id_col, vec_col, fs:
@@ -2667,6 +2682,8 @@ ANN_FAMILIES = {
     ),
     "pq": _quantized_family("pq"),
     "ivfpq": _quantized_family("ivfpq"),
-    # the trained params ARE the corpus extrema: nothing clips at build
-    "sq8": _quantized_family("sq8", build_drift=("clip_frac", 0.0)),
+    # sq8 has no tuning knobs; and the trained params ARE the corpus
+    # extrema, so nothing clips at build
+    "sq8": _quantized_family("sq8", frozenset(),
+                             build_drift=("clip_frac", 0.0)),
 }

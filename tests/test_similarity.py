@@ -673,6 +673,23 @@ def test_pq_topk_large_query_batch_guard(spark):
     out = sim.quantized_topk(df, df.limit(12), "pq", topk=2, model=books,
                              max_query_rows=None)
     assert out.count() > 0
+    # a trained model fixes the codec: training params next to it would
+    # be ignored (``k`` is codewords per subspace, not the top-k)
+    for bad in ({"k": 3}, {"m": 2}, {"iters": 2}):
+        with pytest.raises(TypeError, match="no codec training"):
+            sim.quantized_topk(df, df.limit(2), "pq", model=books, **bad)
+
+
+def test_quantized_layout_defaults():
+    """Training defaults per layout: IVF-PQ keeps its 16 subspaces, flat
+    PQ its 8; unknown params fail like an unknown keyword."""
+    assert sim._layout("pq", {})[2] == {"m": 8, "k": 16, "iters": 1}
+    assert sim._layout("ivfpq", {})[2] == {
+        "m": 16, "k": 16, "iters": 1, "nlist": 8, "coarse_iters": 1,
+        "sim_decimals": 6}
+    assert sim._layout("sq8", {})[2] == {}
+    with pytest.raises(TypeError, match="no params"):
+        sim._layout("sq8", {"m": 4})
 
 
 def test_sq8_recall_and_reconstruction_quality(spark):

@@ -83,10 +83,12 @@ def test_unknown_kind_and_missing_index(spark, engine):
     with pytest.raises(ValueError, match="kind"):
         engine.build_vector_index("vecs", "x", vec_col="embedding",
                                   kind="hnsw")
-    # a param the kind's writer does not take fails before any build
-    with pytest.raises(TypeError, match="no params"):
-        engine.build_vector_index("vecs", "x", vec_col="embedding",
-                                  kind="sq8", m=4)
+    # a param the kind does not take fails before any build; sq8 takes
+    # none, not even the flat writer's storage knobs
+    for bad in ({"m": 4}, {"gbuckets": 4}, {"content_hash": False}):
+        with pytest.raises(TypeError, match="no params"):
+            engine.build_vector_index("vecs", "x", vec_col="embedding",
+                                      kind="sq8", **bad)
     assert "x" not in engine.vector_index_list("vecs")
     q = spark.createDataFrame(
         [(0, [0.1] * 64)], "_oid long, embedding array<double>")
